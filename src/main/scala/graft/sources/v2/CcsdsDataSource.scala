@@ -279,7 +279,8 @@ class CcsdsPartitionReader(
   private var firstCandidateValidated = part.start == 0 || !opts.frameSync
 
   /** Consumes up to resyncWindow+4 bytes: true iff EOF or a marker
-    * STARTS within resyncWindow bytes. Caller repositions via seekTo.
+    * STARTS within resyncWindow bytes (a marker cut short by EOF counts).
+    * Caller repositions via seekTo.
     */
   private def followedByMarkerOrEof(): Boolean = {
     val win = new Array[Int](4)
@@ -288,8 +289,9 @@ class CcsdsPartitionReader(
     while (scanned < resyncWindow + 4) {
       val b = in.read()
       // EOF validates only if it falls within the window itself: a fake
-      // packet ending a few bytes shy of EOF must NOT pass
-      if (b < 0) return scanned <= resyncWindow
+      // packet ending a few bytes shy of EOF must NOT pass — unless those
+      // bytes are the head of a last marker that the file cuts short
+      if (b < 0) return scanned - cutMarkerLength(win, filled) <= resyncWindow
       scanned += 1
       if (filled < 4) { win(filled) = b; filled += 1 }
       else { win(0) = win(1); win(1) = win(2); win(2) = win(3); win(3) = b }
@@ -301,6 +303,12 @@ class CcsdsPartitionReader(
     }
     false
   }
+
+  /** Length of the longest proper marker prefix the window ends with. */
+  private def cutMarkerLength(win: Array[Int], filled: Int): Int =
+    (math.min(filled, 3) to 1 by -1).find { k =>
+      (0 until k).forall(j => win(filled - k + j) == (Marker(j) & 0xff))
+    }.getOrElse(0)
 
   override def next(): Boolean = {
     if (finished) return false

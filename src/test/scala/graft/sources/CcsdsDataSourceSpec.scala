@@ -88,6 +88,25 @@ class CcsdsDataSourceSpec extends SparkSpec {
     }
   }
 
+  test("a sync marker cut short by the end of the file keeps the last whole packet") {
+    // the split that starts inside packet 39 validates it by what follows:
+    // here only the first 1-3 bytes of one more marker, then EOF
+    val packets = (0 until 40).flatMap { i =>
+      CcsdsSource.SyncMarker ++ Fixtures.makeRawPacket(
+        apid = 0x100, seqCount = i, userData = Array.fill[Byte](30)(5))
+    }.toArray
+    val dir = java.nio.file.Files.createTempDirectory("v2cut")
+    for (keep <- 0 to 4) {
+      val f = dir.resolve(s"cut$keep.bin")
+      java.nio.file.Files.write(f, packets ++ CcsdsSource.SyncMarker.take(keep))
+      val got = spark.read.format("ccsds")
+        .option("path", f.toString).option("frame_sync", "true")
+        .option("split_size", "20").load()
+        .select("seq_count").collect().map(_.getInt(0)).sorted.toSeq
+      assert(got == (0 until 40), s"marker cut to $keep bytes: ${got.size} rows")
+    }
+  }
+
   test("hidden and metadata files are skipped; missing path errors loudly") {
     val dir = java.nio.file.Files.createTempDirectory("v2meta")
     java.nio.file.Files.write(dir.resolve("data.bin"), Fixtures.hkStream(10))
