@@ -2,13 +2,17 @@ package graft.telemetry
 
 import graft.sources.CcsdsSource
 import graft.sources.CcsdsSource.Options
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.{col, lit}
 import org.scalacheck.{Gen, Prop, Properties}
+import org.scalacheck.Prop.propBoolean
 
 /** Property tests for the pure kernels (SURVEY.md §5): header round-trip,
   * decode/encode inverses across widths and endianness, parser totality.
-  * These run without a SparkSession — the kernels are plain JVM code that
-  * the Catalyst expressions call. (Pure ScalaCheck Properties: sbt's
-  * ScalaCheck framework runs this directly.)
+  * The kernels are plain JVM code that the Catalyst expressions call.
+  * (Pure ScalaCheck Properties: sbt's ScalaCheck framework runs this
+  * directly.) The two differential properties at the end read files
+  * through `format("ccsds")` on the shared test SparkSession.
   */
 object PropertySpec extends Properties("telemetry-kernels") {
 
@@ -141,6 +145,157 @@ object PropertySpec extends Properties("telemetry-kernels") {
     Prop.forAll(Gen.choose(-100.0, 100.0), Gen.choose(-100.0, 100.0)) { (a, b) =>
       val (lo, hi) = (math.min(a, b), math.max(a, b))
       interp(lo) <= interp(hi) + 1e-9 // monotone table => monotone output
+    }
+  }
+
+  // ---- differential: the in-memory walk vs the `ccsds` V2 source ----
+
+  private val byteGen: Gen[Byte] = Gen.choose(-128, 127).map(_.toByte)
+  private val apids = Seq(0x100, 0x101, 0x2aa, 0x7ff)
+
+  private def containsSync(bytes: Array[Byte]): Boolean =
+    bytes.indexOfSlice(CcsdsSource.SyncMarker.toSeq) >= 0
+
+  /** One generated packet; `bytes` is its 6-byte header + data field. */
+  private case class GenPacket(
+      apid: Int, seq: Int, typeFlag: Int, seqFlags: Int,
+      secHdr: Array[Byte], user: Array[Byte]) {
+    lazy val bytes: Array[Byte] = Fixtures.makeRawPacket(
+      apid = apid, seqCount = seq, userData = user, secHdr = secHdr,
+      typeFlag = typeFlag, seqFlags = seqFlags)
+  }
+
+  /** Packets with an optional 4-byte secondary header; with
+    * `syncInPayload`, one in five payloads embeds the sync pattern.
+    */
+  private def packetGen(syncInPayload: Boolean): Gen[GenPacket] = for {
+    apid <- Gen.oneOf(apids)
+    seq <- Gen.choose(0, 0x3fff)
+    tf <- Gen.choose(0, 1)
+    sfl <- Gen.choose(0, 3)
+    secHdr <- Gen.oneOf(Gen.const(Array.emptyByteArray),
+      Gen.listOfN(4, byteGen).map(_.toArray))
+    n <- Gen.choose(1, 64)
+    user <- Gen.listOfN(n, byteGen).map(_.toArray)
+    sync <- if (syncInPayload) Gen.frequency(1 -> true, 4 -> false) else Gen.const(false)
+    cut <- Gen.choose(0, n)
+  } yield GenPacket(apid, seq, tf, sfl, secHdr,
+    if (sync) user.take(cut) ++ CcsdsSource.SyncMarker ++ user.drop(cut) else user)
+
+  private val optionsGen: Gen[Options] = for {
+    secHdrLength <- Gen.oneOf(0, 2, 4, 8)
+    frameSync <- Gen.oneOf(true, false)
+    filter <- Gen.option(Gen.atLeastOne(apids).map(_.toSeq))
+    sourceId <- Gen.option(Gen.alphaStr.map(_.take(8)))
+    grt <- Gen.option(Gen.choose(0.0, 1e9))
+  } yield Options(secHdrLength, frameSync, filter, sourceId, grt)
+
+  /** A stream of packets, each optionally preceded by a garbage run and
+    * (usually) a sync marker, ending in a truncated copy of one more
+    * marker + packet cut at any byte.
+    */
+  private val messyStreamGen: Gen[Array[Byte]] = {
+    val segment = for {
+      garbage <- Gen.frequency(3 -> Gen.const(Nil), 1 -> Gen.listOf(byteGen).map(_.take(40)))
+      marker <- Gen.frequency(5 -> true, 1 -> false)
+      p <- packetGen(syncInPayload = true)
+    } yield garbage.toArray ++
+      (if (marker) CcsdsSource.SyncMarker else Array.emptyByteArray) ++ p.bytes
+    for {
+      n <- Gen.choose(0, 40)
+      segs <- Gen.listOfN(n, segment)
+      last <- packetGen(syncInPayload = false)
+      keep <- Gen.choose(0, last.bytes.length + 3)
+    } yield segs.foldLeft(Array.emptyByteArray)(_ ++ _) ++
+      (CcsdsSource.SyncMarker ++ last.bytes).take(keep)
+  }
+
+  private type Key = (Int, Int, Int, Int, Int, Int, Int, Seq[Byte], Seq[Byte],
+    Option[Double], Option[Double], Option[String])
+
+  private def key(p: PacketRow): Key =
+    (p.version, p.type_flag, p.sec_hdr_flag, p.apid, p.seq_flags, p.seq_count,
+      p.data_length, p.secondary_header.toSeq, p.user_data.toSeq,
+      p.source_time_tai, p.ground_receipt_time, p.source_id)
+
+  private def key(r: Row): Key =
+    (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4), r.getInt(5),
+      r.getInt(6), r.getAs[Array[Byte]](7).toSeq, r.getAs[Array[Byte]](8).toSeq,
+      Option(r.get(9)).map(_.asInstanceOf[Double]),
+      Option(r.get(10)).map(_.asInstanceOf[Double]), Option(r.getString(11)))
+
+  private def withFile[T](bytes: Array[Byte])(f: String => T): T = {
+    val file = java.nio.file.Files.createTempFile("ccsds-prop", ".bin")
+    try { java.nio.file.Files.write(file, bytes); f(file.toString) }
+    finally java.nio.file.Files.delete(file)
+  }
+
+  /** `format("ccsds")` as the registry `binary` extractor drives it:
+    * options as strings, the APID filter as a pushed-down predicate.
+    */
+  private def readCcsds(path: String, opts: Options, splitSize: Long): DataFrame = {
+    var reader = graft.TestSpark.spark.read.format("ccsds")
+      .option("path", path)
+      .option("frame_sync", opts.frameSync.toString)
+      .option("sec_hdr_length", opts.secHdrLength.toString)
+      .option("split_size", splitSize.toString)
+    opts.sourceId.foreach(v => reader = reader.option("source_id", v))
+    opts.groundReceiptTime.foreach(v => reader = reader.option("ground_receipt_time", v.toString))
+    val df = reader.load()
+    opts.apidFilter.fold(df)(a => df.where(col("apid").isin(a.map(Integer.valueOf): _*)))
+  }
+
+  property("differential: parseStream equals format(ccsds) read as one split") =
+    Prop.forAllNoShrink(messyStreamGen, optionsGen) { (bytes, opts) =>
+      val expected = CcsdsSource.parseStream(bytes, opts).map(key).toSeq
+      val got = withFile(bytes) { path =>
+        readCcsds(path, opts, math.max(bytes.length.toLong, 1L)).collect().map(key).toSeq
+      }
+      (got == expected) :| s"${bytes.length} bytes, $opts: ${got.size} rows vs ${expected.size}"
+    }
+
+  /** Gap-free framed stream (a marker before every packet, nothing
+    * between packets) after a garbage run, ending in a truncated copy of
+    * one more marker + packet. No payload, header or garbage run carries
+    * the sync pattern: a mid-split false sync whose parsed end lands on a
+    * real marker is accepted by design, and the deterministic "spurious
+    * sync pattern" test in CcsdsDataSourceSpec covers that case.
+    */
+  private val framedStreamGen: Gen[(Array[Byte], Seq[GenPacket])] = {
+    val clean = packetGen(syncInPayload = false).suchThat(p => !containsSync(p.bytes))
+    for {
+      lead <- Gen.listOf(byteGen).map(_.take(300).toArray).suchThat(!containsSync(_))
+      n <- Gen.choose(10, 120)
+      pkts <- Gen.listOfN(n, clean)
+      last <- clean
+      keep <- Gen.choose(0, last.bytes.length + 3)
+    } yield (lead ++ pkts.flatMap(p => CcsdsSource.SyncMarker ++ p.bytes) ++
+      (CcsdsSource.SyncMarker ++ last.bytes).take(keep), pkts)
+  }
+
+  property("format(ccsds) at every split_size reproduces a framed stream's packets") = {
+    val gen = for {
+      stream <- framedStreamGen
+      filter <- Gen.option(Gen.atLeastOne(apids).map(_.toSeq))
+    } yield (stream, filter)
+    Prop.forAllNoShrink(gen) { case ((bytes, pkts), filter) =>
+      val opts = Options(secHdrLength = 4, frameSync = true, apidFilter = filter)
+      val expected = pkts.filter(p => filter.forall(_.contains(p.apid))).map { p =>
+        val secFlag = if (p.secHdr.nonEmpty) 1 else 0
+        (0, p.typeFlag, secFlag, p.apid, p.seqFlags, p.seq, p.secHdr.length + p.user.length - 1,
+          p.secHdr.toSeq, p.user.toSeq, None, None, None): Key
+      }
+      val splitSizes = ((1024L until bytes.length.toLong by 1024L) :+ bytes.length.toLong).distinct
+      val got = withFile(bytes) { path =>
+        // one job for all split sizes; union keeps each read's partition order
+        splitSizes.map(s => readCcsds(path, opts, s).withColumn("split_size", lit(s)))
+          .reduce(_ union _).collect().toSeq
+          .groupBy(_.getLong(12)).map { case (s, rows) => s -> rows.map(key) }
+      }
+      Prop.all(splitSizes.map { s =>
+        val rows = got.getOrElse(s, Nil)
+        (rows == expected) :| s"split_size=$s of ${bytes.length}: ${rows.size} rows vs ${expected.size}"
+      }: _*)
     }
   }
 }
