@@ -169,10 +169,7 @@ object Bench {
       // 2.5, s15 4.8 -> 4.1, d13/q30 -15%) don't cover them. With
       // parallelism-first, tiny shuffles already coalesce toward the
       // 1 MB minPartitionSize floor; the 8-core advantage at sf0.1 is
-      // scheduler/GC overhead, not reduce-partition count. Env knob
-      // kept so the probe is one run away at any scale.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"))
+      // scheduler/GC overhead, not reduce-partition count.
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

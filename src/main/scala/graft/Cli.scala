@@ -1,12 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** CLI analog of the reference's `mdp` commands (cli/main.py): stages,
   * inspect, run, version — driven by spark-submit/runMain.
   *
   *   runMain graft.Cli stages
-  *   runMain graft.Cli inspect <file.bin> [maxPackets] [apid]
+  *   runMain graft.Cli inspect <path> [maxPackets] [apid]
   *   runMain graft.Cli run --extractor binary --extractor-config e.json \
   *     [--transformer decom --transformer-config d.json ...] \
   *     --loader parquet --loader-config l.json [--dry-run]
@@ -70,10 +70,7 @@ object Cli {
       val maxPackets = rest.headOption.map(_.toInt).getOrElse(50)
       val apid = rest.drop(1).headOption.map(_.toInt)
       val spark = session()
-      val packets = graft.sources.CcsdsSource.readPackets(spark, path)
-      val filtered = apid.fold(packets)(a =>
-        operators.Telemetry.apidFilter(packets, include = Seq(a)))
-      operators.Telemetry.inspect(filtered, maxPackets).show(maxPackets, truncate = false)
+      inspect(spark, path, maxPackets, apid).show(maxPackets, truncate = false)
       spark.stop()
 
     case "run" :: rest =>
@@ -107,6 +104,18 @@ object Cli {
       System.err.println(s"Unknown command: ${other.mkString(" ")}")
       System.err.println("Commands: version | stages | inspect | run")
       sys.exit(2)
+  }
+
+  /** The `inspect` table: packets read through the `binary` extractor
+    * (the `ccsds` source, APID filter pushed into the walk), as `run` reads
+    * them. `path` is a file, directory or glob.
+    */
+  private[graft] def inspect(
+      spark: SparkSession, path: String, maxPackets: Int, apid: Option[Int]): DataFrame = {
+    import org.json4s._
+    val config = JObject(("path" -> JString(path)) ::
+      apid.map(a => "apid_filter" -> JArray(List(JInt(a)))).toList)
+    operators.Telemetry.inspect(Registry.getExtractor("binary")(spark, config), maxPackets)
   }
 
   case class RunOpts(

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.collection.mutable
+import scala.util.control.NonFatal
 
 /** Thin pipeline composer + observability (SURVEY.md §2.12): the
   * reference's Pipeline.run / StageResult / HookManager / PipelineMetrics
@@ -39,8 +40,8 @@ object Pipeline {
         (if (errors.nonEmpty) s"; errors: ${errors.mkString("; ")}" else "")
   }
 
-  /** Pub/sub hooks (observability/hooks.py contract): handler errors are
-    * swallowed, events fire synchronously.
+  /** Pub/sub hooks (observability/hooks.py contract): non-fatal handler
+    * errors are swallowed, events fire synchronously.
     */
   final class HookManager {
     private val handlers = mutable.Map.empty[String, mutable.Buffer[Map[String, Any] => Unit]]
@@ -48,7 +49,7 @@ object Pipeline {
       handlers.getOrElseUpdate(event, mutable.Buffer.empty) += h
     def fire(event: String, payload: Map[String, Any] = Map.empty): Unit =
       handlers.getOrElse(event, Nil).foreach { h =>
-        try h(payload) catch { case _: Throwable => () }
+        try h(payload) catch { case NonFatal(_) => () }
       }
   }
 
@@ -100,7 +101,8 @@ object Pipeline {
       PipelineResult(
         "success", rows, stageResults.toSeq, errors.toSeq, elapsed)
     } catch {
-      case e: Throwable =>
+      // fatal JVM errors (OOM, LinkageError, interrupts) propagate
+      case NonFatal(e) =>
         errors += e.getMessage
         hooks.fire("stage.error", Map("error" -> e.getMessage))
         PipelineResult("failed", rows, stageResults.toSeq, errors.toSeq,

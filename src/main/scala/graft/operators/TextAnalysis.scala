@@ -356,14 +356,6 @@ object TextAnalysis {
     "de" -> Seq("der", "die", "und", "das", "ist"),
     "zh" -> Seq("的", "是", "了", "在", "和"))
 
-  def langScore(text: Column, markers: Seq[String]): Column =
-    langScoreFromTokens(wsTokens(lower(text)), markers)
-
-  private def langScoreFromTokens(toks: Column, markers: Seq[String]): Column =
-    when(size(toks) > 0,
-      size(filter(toks, t => t.isInCollection(markers))).cast("double") / size(toks))
-      .otherwise(0.0)
-
   /** Predicted language = argmax marker score; ties break
     * deterministically to the greatest language code (lexicographic max
     * of the (score, code) pair — same rule an SQL max(struct) applies).

@@ -1,29 +1,34 @@
 package graft.sources
 
-import graft.telemetry.PacketRow
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import java.io.{ByteArrayInputStream, Closeable, InputStream}
 
-/** CCSDS space-packet stream reader.
+import graft.telemetry.PacketRow
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** CCSDS space-packet stream walker: the one decoder behind every packet
+  * reader.
   *
   * Behavior of the reference binary extractor
-  * (/root/reference/src/mdp/plugins/extractors/binary.py:58-136)
-  * re-expressed for Spark: `spark.read.format("binaryFile")` supplies one
-  * row per file; a flatMap walks each file's bytes into packet rows. The
-  * reference's `batch_size` disappears (Spark partitions replace hand
-  * batching) and the reference's whole-file `BytesIO` read is kept only
-  * per-task (binaryFile already materializes per-file content; files are
-  * the parallelism unit — a variable-length packet stream with no sync
-  * markers is not safely splittable mid-file).
+  * (/root/reference/src/mdp/plugins/extractors/binary.py:58-136): find
+  * the optional 0x1ACFFC1D sync marker, decode the 6-byte primary header,
+  * apply the APID filter during the walk, split off the secondary header.
+  * [[Walker]] reads from an `open(offset)` function, so the `ccsds` V2
+  * source (`v2/CcsdsDataSource.scala`) walks a Hadoop stream split by
+  * split and [[parseStream]] walks an in-memory byte array — the packet
+  * file-stream's per-file bytes (the V2 source is batch-only) and test
+  * fixtures. The reference's `batch_size` disappears (Spark partitions
+  * replace hand batching).
   *
   * The reference resyncs by `continue` after a failed 6-byte header parse
   * (binary.py:94-97); since any 6 bytes parse structurally, the only real
   * error paths are truncation (drop tail, as the reference does) and the
-  * optional 0x1ACFFC1D sync-marker scan.
+  * sync-marker scan.
   */
 object CcsdsSource {
 
   val SyncMarker: Array[Byte] =
     Array(0x1a.toByte, 0xcf.toByte, 0xfc.toByte, 0x1d.toByte)
+  private val MarkerWord = 0x1acffc1d
   val HeaderSize = 6
 
   case class Options(
@@ -33,32 +38,126 @@ object CcsdsSource {
       sourceId: Option[String] = None,
       groundReceiptTime: Option[Double] = None)
 
-  /** Parse one contiguous packet stream into rows (pure; test-friendly). */
-  def parseStream(bytes: Array[Byte], opts: Options): Iterator[PacketRow] =
-    new Iterator[PacketRow] {
-      private var pos = 0
-      private var nextRow: PacketRow = _
-      private def advance(): Unit = {
-        nextRow = null
-        while (nextRow == null) {
-          if (opts.frameSync) {
-            pos = indexOfMarker(bytes, pos)
-            if (pos < 0) return
-            pos += SyncMarker.length
+  /** Walks the packets whose sync marker (or, unframed, whose first byte)
+    * lies in [start, end) and that pass the APID filter. Reads ahead past
+    * `end` to finish the last owned packet; memory is O(max packet size),
+    * not O(stream size) — unlike the reference, which reads the whole file
+    * into RAM (binary.py:71-73).
+    *
+    * `open(offset)` returns a stream positioned at `offset`. It is called
+    * again only to reposition after a suspect first candidate, and may
+    * reuse one underlying stream; `close` closes the last one returned.
+    */
+  final class Walker(
+      open: Long => InputStream, start: Long, end: Long,
+      opts: Options, resyncWindow: Int = 0)
+      extends Closeable {
+
+    private var in = open(start)
+    private var pos = start
+
+    private def seekTo(p: Long): Unit = { in = open(p); pos = p }
+
+    /** Skips to just past the next marker; false at EOF or when that
+      * marker starts at or after `end` (the next split owns it).
+      */
+    private def seekToMarker(): Boolean = {
+      var win = 0 // the last four bytes read
+      var filled = 0
+      while (true) {
+        val b = in.read()
+        if (b < 0) return false
+        pos += 1
+        win = (win << 8) | b
+        if (filled < 4) filled += 1
+        if (filled == 4 && win == MarkerWord) return pos - 4 < end
+      }
+      false
+    }
+
+    private def readFully(n: Int): Array[Byte] = {
+      val buf = new Array[Byte](n)
+      var off = 0
+      while (off < n) {
+        val r = in.read(buf, off, n - off)
+        if (r < 0) return null
+        off += r
+      }
+      pos += n
+      buf
+    }
+
+    // The first marker a mid-stream split finds is SUSPECT: the split
+    // start can land inside a packet whose payload happens to contain the
+    // sync pattern. Validate the first candidate by requiring the NEXT
+    // marker (or EOF) to start within `resyncWindow` bytes of the parsed
+    // packet's end — a packet parsed out of payload garbage has an
+    // arbitrary data_length, so its end does not line up with the real
+    // framing. The default window of 0 (marker immediately follows, the
+    // gapless-CADU layout) rejects nearly all false syncs; streams with
+    // inter-packet garbage must set resync_window >= their max garbage run
+    // and accept the correspondingly weaker check. Later markers are
+    // reached sequentially from a validated packet and need no check.
+    private var validated = start == 0 || !opts.frameSync
+
+    /** Consumes up to resyncWindow+4 bytes: true iff EOF or a marker
+      * STARTS within resyncWindow bytes (a marker cut short by EOF counts).
+      * Caller repositions via seekTo.
+      */
+    private def followedByMarkerOrEof(): Boolean = {
+      var win = 0
+      var scanned = 0
+      while (scanned < resyncWindow + 4) {
+        val b = in.read()
+        // EOF validates only if it falls within the window itself: a fake
+        // packet ending a few bytes shy of EOF must NOT pass — unless those
+        // bytes are the head of a last marker that the file cuts short
+        if (b < 0) return scanned - cutMarkerLength(win, scanned) <= resyncWindow
+        scanned += 1
+        win = (win << 8) | b
+        if (scanned >= 4 && win == MarkerWord) return scanned - 4 <= resyncWindow
+      }
+      false
+    }
+
+    /** Length of the longest proper marker prefix the window ends with. */
+    private def cutMarkerLength(win: Int, filled: Int): Int =
+      (math.min(filled, 3) to 1 by -1).find { k =>
+        (win & ((1 << (8 * k)) - 1)) == MarkerWord >>> (8 * (4 - k))
+      }.getOrElse(0)
+
+    /** The next owned packet passing the APID filter, or null at the end. */
+    def nextPacket(): PacketRow = {
+      while (true) {
+        var candidateMarkerEnd = -1L
+        if (opts.frameSync) {
+          if (!seekToMarker()) return null
+          candidateMarkerEnd = pos
+        } else if (pos >= end) return null
+        val header = readFully(HeaderSize)
+        if (header == null) return null
+        val word0 = ((header(0) & 0xff) << 8) | (header(1) & 0xff)
+        val word1 = ((header(2) & 0xff) << 8) | (header(3) & 0xff)
+        val word2 = ((header(4) & 0xff) << 8) | (header(5) & 0xff)
+        val apid = word0 & 0x7ff
+        val dataField = readFully(word2 + 1)
+        if (dataField == null) {
+          if (validated) return null // truncated tail
+          seekTo(candidateMarkerEnd) // false sync at the tail: rescan after it
+        } else {
+          if (!validated) {
+            val packetEnd = pos
+            if (followedByMarkerOrEof()) {
+              seekTo(packetEnd) // validated: resume exactly after the packet
+              validated = true
+            } else {
+              seekTo(candidateMarkerEnd) // spurious in-payload marker
+            }
           }
-          if (pos + HeaderSize > bytes.length) return
-          val word0 = ((bytes(pos) & 0xff) << 8) | (bytes(pos + 1) & 0xff)
-          val word1 = ((bytes(pos + 2) & 0xff) << 8) | (bytes(pos + 3) & 0xff)
-          val word2 = ((bytes(pos + 4) & 0xff) << 8) | (bytes(pos + 5) & 0xff)
-          val apid = word0 & 0x7ff
-          val dataLen = word2 + 1
-          if (pos + HeaderSize + dataLen > bytes.length) { pos = bytes.length; return }
-          val fieldStart = pos + HeaderSize
-          pos = fieldStart + dataLen
-          if (opts.apidFilter.forall(_.contains(apid))) {
+          if (validated && opts.apidFilter.forall(_.contains(apid))) {
             val secFlag = (word0 >> 11) & 0x1
-            val secLen = if (secFlag == 1) math.min(opts.secHdrLength, dataLen) else 0
-            nextRow = PacketRow(
+            val secLen = if (secFlag == 1) math.min(opts.secHdrLength, dataField.length) else 0
+            return PacketRow(
               version = (word0 >> 13) & 0x7,
               type_flag = (word0 >> 12) & 0x1,
               sec_hdr_flag = secFlag,
@@ -66,42 +165,27 @@ object CcsdsSource {
               seq_flags = (word1 >> 14) & 0x3,
               seq_count = word1 & 0x3fff,
               data_length = word2,
-              secondary_header = java.util.Arrays.copyOfRange(bytes, fieldStart, fieldStart + secLen),
-              user_data = java.util.Arrays.copyOfRange(bytes, fieldStart + secLen, fieldStart + dataLen),
+              secondary_header = java.util.Arrays.copyOfRange(dataField, 0, secLen),
+              user_data = java.util.Arrays.copyOfRange(dataField, secLen, dataField.length),
               source_time_tai = None,
               ground_receipt_time = opts.groundReceiptTime,
               source_id = opts.sourceId)
           }
+          // loop: filtered out, or rescanning after a rejected candidate
         }
       }
-      advance()
-      override def hasNext: Boolean = nextRow != null
-      override def next(): PacketRow = { val r = nextRow; advance(); r }
+      null
     }
 
-  private def indexOfMarker(bytes: Array[Byte], from: Int): Int = {
-    var i = math.max(from, 0)
-    val last = bytes.length - SyncMarker.length
-    while (i <= last) {
-      if (bytes(i) == SyncMarker(0) && bytes(i + 1) == SyncMarker(1) &&
-          bytes(i + 2) == SyncMarker(2) && bytes(i + 3) == SyncMarker(3)) return i
-      i += 1
-    }
-    -1
+    override def close(): Unit = in.close()
   }
 
-  /** Read CCSDS packet files into a packet DataFrame (schema = PacketRow).
-    * Parallelism = files; APID filtering happens during the parse (the
-    * reference's scan-level pushdown, binary.py:103-104).
-    */
-  def readPackets(spark: SparkSession, path: String, opts: Options = Options()): DataFrame = {
-    import spark.implicits._
-    val files: Dataset[(String, Array[Byte])] = spark.read
-      .format("binaryFile")
-      .load(path)
-      .select("path", "content")
-      .as[(String, Array[Byte])]
-    files.flatMap { case (_, content) => parseStream(content, opts) }.toDF()
+  /** Walk one whole in-memory packet stream into rows (pure; test-friendly). */
+  def parseStream(bytes: Array[Byte], opts: Options): Iterator[PacketRow] = {
+    val walker = new Walker(
+      off => new ByteArrayInputStream(bytes, off.toInt, bytes.length - off.toInt),
+      0L, bytes.length, opts)
+    Iterator.continually(walker.nextPacket()).takeWhile(_ != null)
   }
 
   /** In-memory variant for fixtures/tests. */

@@ -4,7 +4,7 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import graft.sources.CcsdsSource
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -17,8 +17,7 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Splittable CCSDS packet-stream source (DataSource V2, SURVEY.md §2.1 /
   * §7.2 scale path).
   *
-  * The binaryFile+flatMap reader parallelizes across FILES — fine for many
-  * downlink files, useless for one 1 TB dump. When the stream is framed
+  * Every file is at least one partition. When the stream is framed
   * with 0x1ACFFC1D sync markers, byte ranges ARE safely splittable: each
   * split owns the packets whose marker position p lies in [start, end),
   * seeking forward from its start offset to the first marker (the record
@@ -198,10 +197,8 @@ class CcsdsReaderFactory(
       partition.asInstanceOf[CcsdsInputPartition], opts, conf.value, resyncWindow)
 }
 
-/** Reads packets whose sync marker (or, unsplit, whose first byte) lies
-  * in [start, end). Streams the byte range with a bounded read-ahead:
-  * memory is O(max packet size), not O(file size) — unlike the reference,
-  * which reads the whole file into RAM (binary.py:71-73).
+/** Walks one split with the shared [[CcsdsSource.Walker]] over a seekable
+  * Hadoop stream (bounded read-ahead: O(max packet size) memory).
   */
 class CcsdsPartitionReader(
     part: CcsdsInputPartition, opts: CcsdsSource.Options,
@@ -209,158 +206,26 @@ class CcsdsPartitionReader(
     resyncWindow: Int = 0)
     extends PartitionReader[InternalRow] {
 
-  private val raw = {
+  private val packets = {
     val p = new Path(part.file)
-    val fs = p.getFileSystem(hadoopConf)
-    val stream = fs.open(p)
-    stream.seek(part.start)
-    stream
+    val raw = p.getFileSystem(hadoopConf).open(p)
+    // a reposition re-seeks the one Hadoop stream behind a fresh buffer
+    new CcsdsSource.Walker(
+      offset => { raw.seek(offset); new java.io.BufferedInputStream(raw, 1 << 16) },
+      part.start, part.end, opts, resyncWindow)
   }
-  private var in = new java.io.BufferedInputStream(raw, 1 << 16)
-  private var pos: Long = part.start
+  private val groundReceiptTime = opts.groundReceiptTime.map(java.lang.Double.valueOf).orNull
+  private val sourceId = opts.sourceId.map(UTF8String.fromString).orNull
   private var current: InternalRow = _
-  private var finished = false
-
-  /** Absolute reposition (rare: only on suspect-first-candidate
-    * rejection/confirmation); rebuilds the read buffer.
-    */
-  private def seekTo(p: Long): Unit = {
-    raw.seek(p)
-    in = new java.io.BufferedInputStream(raw, 1 << 16)
-    pos = p
-  }
-
-  private val Marker = CcsdsSource.SyncMarker
-
-  // sliding 4-byte window for marker scan
-  private def seekToMarker(): Boolean = {
-    val win = new Array[Int](4)
-    var filled = 0
-    while (true) {
-      val b = in.read()
-      if (b < 0) return false
-      pos += 1
-      if (filled < 4) { win(filled) = b; filled += 1 }
-      else { win(0) = win(1); win(1) = win(2); win(2) = win(3); win(3) = b }
-      if (filled == 4 &&
-          win(0) == (Marker(0) & 0xff) && win(1) == (Marker(1) & 0xff) &&
-          win(2) == (Marker(2) & 0xff) && win(3) == (Marker(3) & 0xff)) {
-        // marker START position is pos - 4; owned iff < part.end
-        if (pos - 4 >= part.end) return false
-        return true
-      }
-    }
-    false
-  }
-
-  private def readFully(n: Int): Array[Byte] = {
-    val buf = new Array[Byte](n)
-    var off = 0
-    while (off < n) {
-      val r = in.read(buf, off, n - off)
-      if (r < 0) return null
-      off += r
-    }
-    pos += n
-    buf
-  }
-
-  // The first marker a mid-file split finds is SUSPECT: the split start
-  // can land inside a packet whose payload happens to contain the sync
-  // pattern. Validate the first candidate by requiring the NEXT marker
-  // (or EOF) to start within `resyncWindow` bytes of the parsed packet's
-  // end — a packet parsed out of payload garbage has an arbitrary
-  // data_length, so its end does not line up with the real framing. The
-  // default window of 0 (marker immediately follows, the gapless-CADU
-  // layout) rejects nearly all false syncs; streams with inter-packet
-  // garbage must set resync_window >= their max garbage run and accept
-  // the correspondingly weaker check. Later markers are reached
-  // sequentially from a validated packet and need no check.
-  private var firstCandidateValidated = part.start == 0 || !opts.frameSync
-
-  /** Consumes up to resyncWindow+4 bytes: true iff EOF or a marker
-    * STARTS within resyncWindow bytes (a marker cut short by EOF counts).
-    * Caller repositions via seekTo.
-    */
-  private def followedByMarkerOrEof(): Boolean = {
-    val win = new Array[Int](4)
-    var filled = 0
-    var scanned = 0
-    while (scanned < resyncWindow + 4) {
-      val b = in.read()
-      // EOF validates only if it falls within the window itself: a fake
-      // packet ending a few bytes shy of EOF must NOT pass — unless those
-      // bytes are the head of a last marker that the file cuts short
-      if (b < 0) return scanned - cutMarkerLength(win, filled) <= resyncWindow
-      scanned += 1
-      if (filled < 4) { win(filled) = b; filled += 1 }
-      else { win(0) = win(1); win(1) = win(2); win(2) = win(3); win(3) = b }
-      if (filled == 4 &&
-          win(0) == (Marker(0) & 0xff) && win(1) == (Marker(1) & 0xff) &&
-          win(2) == (Marker(2) & 0xff) && win(3) == (Marker(3) & 0xff)) {
-        return scanned - 4 <= resyncWindow // marker start offset
-      }
-    }
-    false
-  }
-
-  /** Length of the longest proper marker prefix the window ends with. */
-  private def cutMarkerLength(win: Array[Int], filled: Int): Int =
-    (math.min(filled, 3) to 1 by -1).find { k =>
-      (0 until k).forall(j => win(filled - k + j) == (Marker(j) & 0xff))
-    }.getOrElse(0)
 
   override def next(): Boolean = {
-    if (finished) return false
-    while (true) {
-      var candidateMarkerEnd = -1L
-      if (opts.frameSync) {
-        if (!seekToMarker()) { finished = true; return false }
-        candidateMarkerEnd = pos
-      } else if (pos >= part.end) {
-        finished = true; return false
-      }
-      val header = readFully(6)
-      if (header == null) { finished = true; return false }
-      val word0 = ((header(0) & 0xff) << 8) | (header(1) & 0xff)
-      val word1 = ((header(2) & 0xff) << 8) | (header(3) & 0xff)
-      val word2 = ((header(4) & 0xff) << 8) | (header(5) & 0xff)
-      val apid = word0 & 0x7ff
-      val dataField = readFully(word2 + 1)
-      if (dataField == null) {
-        if (!firstCandidateValidated) {
-          // false sync at the tail: rescan just after the fake marker
-          seekTo(candidateMarkerEnd)
-        } else { finished = true; return false } // truncated tail
-      } else {
-        if (!firstCandidateValidated) {
-          val packetEnd = pos
-          if (followedByMarkerOrEof()) {
-            seekTo(packetEnd) // validated: resume exactly after the packet
-            firstCandidateValidated = true
-          } else {
-            seekTo(candidateMarkerEnd) // spurious in-payload marker
-          }
-        }
-        if (firstCandidateValidated && opts.apidFilter.forall(_.contains(apid))) {
-          val secFlag = (word0 >> 11) & 0x1
-          val secLen = if (secFlag == 1) math.min(opts.secHdrLength, dataField.length) else 0
-          current = InternalRow(
-            (word0 >> 13) & 0x7, (word0 >> 12) & 0x1, secFlag, apid,
-            (word1 >> 14) & 0x3, word1 & 0x3fff, word2,
-            java.util.Arrays.copyOfRange(dataField, 0, secLen),
-            java.util.Arrays.copyOfRange(dataField, secLen, dataField.length),
-            null,
-            opts.groundReceiptTime.map(java.lang.Double.valueOf).orNull,
-            opts.sourceId.map(UTF8String.fromString).orNull)
-          return true
-        }
-        // loop: filtered out, or rescanning after a rejected candidate
-      }
-    }
-    false
+    val p = packets.nextPacket()
+    if (p != null) current = InternalRow(
+      p.version, p.type_flag, p.sec_hdr_flag, p.apid, p.seq_flags, p.seq_count,
+      p.data_length, p.secondary_header, p.user_data, null, groundReceiptTime, sourceId)
+    p != null
   }
 
   override def get(): InternalRow = current
-  override def close(): Unit = in.close()
+  override def close(): Unit = packets.close()
 }

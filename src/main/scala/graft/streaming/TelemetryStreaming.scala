@@ -15,14 +15,16 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * (the reference leaves seq_count wrap/loss unhandled — packet.py:43).
   *
   * Everything here is expressed on streaming DataFrames, so the same
-  * decom/calibration transforms from the batch path run unchanged inside
-  * foreachBatch or directly on the stream (they are narrow column maps).
+  * decom/calibration transforms from the batch path run unchanged on the
+  * stream (they are narrow column maps).
   */
 object TelemetryStreaming {
 
-  /** Ingest CCSDS packet files as they land in a directory. Each file is
-    * parsed with the same walker as the batch source (per-file
-    * parallelism; variable-length packets are not splittable mid-file).
+  /** Ingest CCSDS packet files as they land in a directory. The `ccsds`
+    * V2 source is batch-only, so `binaryFile` supplies each new file's
+    * bytes and [[graft.sources.CcsdsSource.parseStream]] walks them with
+    * the same walker that source uses (one file per task; a 2 GiB
+    * `binaryFile` cap per file).
     */
   def packetFileStream(
       spark: SparkSession, dir: String,
@@ -113,20 +115,4 @@ object TelemetryStreaming {
           Iterator(SeqGapReport(apid, st.received, st.gaps, st.lastSeq))
       }
   }
-
-  /** foreachBatch sink: run the batch pipeline (decom -> calibrate ->
-    * partitioned parquet append) on each micro-batch — exactly-once via
-    * the file-sink commit protocol, replacing the reference's
-    * non-atomic read-concat-rewrite append.
-    */
-  def pipelineSink(
-      packets: DataFrame, defs: Seq[ParameterDef],
-      calibrations: Seq[CalibrationEntry], outDir: String, checkpointDir: String) =
-    packets.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.sinks.Sinks.writeTidyParquet(
-          decomStream(batch, defs, calibrations), outDir, overwrite = false)
-      }
 }

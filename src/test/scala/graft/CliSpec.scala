@@ -242,6 +242,23 @@ class CliSpec extends SparkSpec {
     assert(opts.dryRun)
   }
 
+  test("inspect reads a directory through the ccsds source, with and without an APID") {
+    val dir = java.nio.file.Files.createTempDirectory("cli_inspect")
+    Fixtures.writeHkFile(dir.resolve("a.bin"), 20)
+    Fixtures.writeHkFile(dir.resolve("b.bin"), 30)
+    def shown(maxPackets: Int, apid: Option[Int]) =
+      Cli.inspect(spark, dir.toString, maxPackets, apid).collect()
+        .map(r => (r.getAs[String]("apid_hex"), r.getAs[Int]("seq_count"))).toSeq
+    val all = shown(100, None)
+    assert(all.size == 50 && all.map(_._1).distinct == Seq("0x0100"))
+    assert(all.map(_._2) == ((0 until 20) ++ (0 until 30)).sorted)
+    assert(shown(100, Some(0x100)) == all)
+    assert(shown(100, Some(0x200)).isEmpty)
+    assert(shown(7, None).size == 7)
+    val err = intercept[Exception](Cli.inspect(spark, dir.toString + "/nope", 10, None).collect())
+    assert(err.getMessage.contains("does not exist"))
+  }
+
   test("ccsds loader round-trips packets through the binary extractor") {
     val dir = java.nio.file.Files.createTempDirectory("ccsds_rt_in")
     val out = java.nio.file.Files.createTempDirectory("ccsds_rt_out").toString

@@ -4,12 +4,12 @@ import graft.SparkSpec
 import graft.telemetry.Fixtures
 import org.apache.spark.sql.functions._
 
-/** V2 source: split correctness (marker-framed files), equality with the
-  * flatMap reader, and APID pushdown.
+/** V2 source: split correctness (marker-framed files), the ownership
+  * rule, false-sync rejection, and APID pushdown.
   */
 class CcsdsDataSourceSpec extends SparkSpec {
 
-  private def markerFramedFile(n: Int): (java.nio.file.Path, Array[Byte]) = {
+  private def markerFramedFile(n: Int): java.nio.file.Path = {
     val bytes = (0 until n).flatMap { i =>
       CcsdsSource.SyncMarker ++ Fixtures.makeRawPacket(
         apid = if (i % 3 == 0) 0x200 else 0x100, seqCount = i % 16384,
@@ -20,11 +20,10 @@ class CcsdsDataSourceSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("v2src")
     val f = dir.resolve("stream.bin")
     java.nio.file.Files.write(f, bytes)
-    (f, bytes)
   }
 
   test("splittable read: many small splits reproduce the whole stream exactly") {
-    val (f, bytes) = markerFramedFile(500)
+    val f = markerFramedFile(500)
     val df = spark.read.format("ccsds")
       .option("path", f.toString)
       .option("frame_sync", "true")
@@ -32,19 +31,20 @@ class CcsdsDataSourceSpec extends SparkSpec {
       .option("split_size", "1024") // force many splits
       .load()
     assert(df.rdd.getNumPartitions > 5, "expected the file to split")
-    assert(df.count() == 500)
-    // matches the single-pass flatMap parser bit for bit
-    val viaFlatMap = CcsdsSource.packetsFromBytes(spark, Seq(bytes),
-      CcsdsSource.Options(secHdrLength = 4, frameSync = true))
-    val a = df.select("apid", "seq_count", "user_data").collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getAs[Array[Byte]](2).toSeq)).toSet
-    val b = viaFlatMap.select("apid", "seq_count", "user_data").collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getAs[Array[Byte]](2).toSeq)).toSet
-    assert(a == b)
+    // every fixture packet comes back exactly once, bit for bit
+    val got = df.select("apid", "seq_count", "secondary_header", "user_data").collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getAs[Array[Byte]](2).toSeq,
+        r.getAs[Array[Byte]](3).toSeq)).toSeq
+    val expected = (0 until 500).map { i =>
+      (if (i % 3 == 0) 0x200 else 0x100, i, Seq[Byte](1, 2, 3, 4),
+        graft.telemetry.BinaryFieldOps.packNumberBE(
+          (i * 7).toDouble, 32, graft.telemetry.ParameterType.UINT).toSeq)
+    }
+    assert(got.sortBy(_._2) == expected)
   }
 
   test("split boundaries never duplicate or drop packets (ownership rule)") {
-    val (f, _) = markerFramedFile(199)
+    val f = markerFramedFile(199)
     for (split <- Seq(137L, 256L, 1000L, 100000L)) {
       val n = spark.read.format("ccsds")
         .option("path", f.toString).option("frame_sync", "true")
@@ -54,7 +54,7 @@ class CcsdsDataSourceSpec extends SparkSpec {
   }
 
   test("apid predicate pushes into the scan") {
-    val (f, _) = markerFramedFile(300)
+    val f = markerFramedFile(300)
     val df = spark.read.format("ccsds")
       .option("path", f.toString).option("frame_sync", "true").load()
       .where(col("apid") === 0x200)
