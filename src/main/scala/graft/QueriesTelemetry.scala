@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.{Calibration, Decom, Telemetry}
-import graft.sources.{CcsdsSource, CsvTelemetrySource}
+import graft.sources.CsvTelemetrySource
 import graft.telemetry._
 import graft.telemetry.CcsdsColumns._
 import org.apache.spark.sql.{DataFrame, SparkSession}

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.{Calibration, Decom, Telemetry}
-import graft.sources.{CcsdsSource, CsvTelemetrySource, JsonlSource}
+import graft.sources.{CsvTelemetrySource, JsonlSource}
 import graft.telemetry.{CalibrationEntry, ParameterDef}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
