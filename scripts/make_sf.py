@@ -26,7 +26,8 @@ point honest instead of pathological:
   filters in queries are lower bounds, which forward shifts keep
   satisfied.
 
-Output is for Bench/ProfQuery only - the DuckDB oracle gate keeps
+Output is for Bench only (SPARK_GRAFT_SF_DIR=DST_DIR, optionally with
+SPARK_GRAFT_ONLY=<query,...>) - the DuckDB oracle gate keeps
 running on the driver-generated sf directories.
 """
 import random

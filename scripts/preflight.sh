@@ -218,18 +218,15 @@ if errs:
 print(f"bench total: {b['value']} {b['unit']} over {len(b.get('queries', {}))} queries")
 EOF
 
-# Per-query regression report vs the frozen baseline (informational:
-# totals swing with session noise, so this prints rather than fails —
-# a >2x regression on a top query deserves a ProfQuery isolation run
-# before shipping, see SCALE.md "Bench-variance class")
+# Per-query report vs the frozen baseline (informational: it prints
+# rather than fails). Bench reports per-query medians; a >2x ratio on a
+# query worth seconds deserves a SPARK_GRAFT_ONLY=<name> bench run.
 python3 - "$OUT/bench.json" <<'EOF'
 import json, sys
 try:
-    baseline = json.load(open("BASELINE_QUERIES.json"))
-    base = baseline["queries"]
+    base = json.load(open("BASELINE_QUERIES.json"))["queries"]
 except FileNotFoundError:
     sys.exit(0)
-floor = baseline.get("floor_s", 0.0)
 cur = json.load(open(sys.argv[1])).get("queries", {})
 if cur and not (set(cur) & set(base)):
     # the compact line carries PREFIX keys (keys:"prefix"); the
@@ -239,21 +236,12 @@ if cur and not (set(cur) & set(base)):
                              .get("queries_file", "BENCH_LAST.json")))["queries"]
     except FileNotFoundError:
         pass
-# floor-bound entries (frozen AND current under floor_s) are scheduler
-# noise, not plan ratios — report them separately so the top-5 list is
-# real regressions only
-pairs = [(k, v, base[k], v / base[k]) for k, v in cur.items()
-         if k in base and base[k] > 0 and v > 0]
-floor_bound = sorted(k for k, v, b, _ in pairs if v < floor and b < floor)
-regs = sorted((t for t in pairs if t[0] not in floor_bound),
-              key=lambda t: -t[3])[:5]
-print("top-5 vs frozen baseline (query, now, baseline, ratio):")
-for k, v, b, r in regs:
-    flag = "  <-- check with ProfQuery" if r > 2.0 and v > 1.0 else ""
-    print(f"  {k}: {v:.2f}s vs {b:.2f}s = {r:.2f}x{flag}")
-if floor_bound:
-    print(f"  (floor-bound, both sides < {floor}s — ratios are job-launch "
-          f"noise: {', '.join(floor_bound)})")
+ratios = sorted(((k, v, base[k], v / base[k]) for k, v in cur.items()
+                 if k in base and base[k] > 0 and v > 0),
+                key=lambda t: -t[3])[:5]
+print("top-5 median / frozen baseline (query, median, baseline, ratio):")
+for k, v, b, r in ratios:
+    print(f"  {k}: {v:.2f}s vs {b:.2f}s = {r:.2f}x")
 new = sorted(k for k in cur if k not in base)
 if new:
     print(f"  (no baseline yet: {', '.join(new)})")

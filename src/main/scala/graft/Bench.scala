@@ -2,63 +2,39 @@ package graft
 
 import java.util.concurrent.atomic.AtomicLong
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.GraftSparkShims
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: runs every registry query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line {"metric":"total",...}.
   *
-  * Measurement discipline (the round-2 artifact recorded 3-9x inflated
-  * per-query numbers from single-shot timing in a 71-query session):
-  *   - each query runs TWICE and the MIN is reported — the first run
-  *     absorbs codegen/JIT/GC noise, the min is the query's cost;
-  *   - per-query failures are NOT folded into the timing: a failed
-  *     query reports -1 and lands in an "errors" map, so a breakage is
-  *     visible in the artifact instead of silently distorting the total;
-  *   - per-query shuffle read/write and spill bytes ride along in a
-  *     "shuffle" map (task-metrics listener), so pollution-vs-regression
-  *     questions are answerable from the artifact alone;
-  *   - the JSON line is also written to BENCH_LAST.json — truncated
-  *     stdout cannot lose the metric line;
-  *   - a COMPACT metric line (values rounded to 10ms, no shuffle map)
-  *     is printed as the very last stdout line after spark.stop(): the
-  *     harness that records the official artifact keeps only a short
-  *     stdout tail, and the full line (~6 KB at 85 queries) plus sbt's
-  *     success banner overflowed it six rounds in a row — the compact
-  *     line is sized to survive a 2000-char tail with the banner
-  *     suppressed (build.sbt `showSuccess := false`);
-  *   - the session cache is cleared between query FAMILIES (the name
-  *     prefix up to the first digit): round 5's official run showed
-  *     6-13x inflation on five broadcast-heavy queries that vanished
-  *     unchanged in round 6 — cached/broadcast state accumulated across
-  *     85 queries is the suspected channel, so each family starts from
-  *     a clean cache and a GC'd heap (GC also lets the ContextCleaner
-  *     reclaim stale broadcasts);
-  *   - all TempDirs.cached artifacts are built in a dedicated PRE-STAGE
-  *     pass before the timed loop (full runs), so build side-effects
-  *     (GC wake, heap churn, build shuffle files) never land inside a
-  *     query's reps or its neighbors'; build cost is recorded in the
-  *     "staging" map exactly as before;
-  *   - a POLLUTION GUARD re-measures any query reading >1.5x its
-  *     frozen-baseline entry OR >1.5x its best entry across the last
-  *     two committed round artifacts (round-over-round drift under a
-  *     loose frozen value is otherwise unexamined) in a fresh region
-  *     and records the min of both regions (adjudication in the
-  *     "repolled" map) — sustained same-region pollution defeats the
-  *     rep-disagreement rule because every rep in the region reads
-  *     high. The frozen + round-over-round maps arm only at the
-  *     baselines' scale factor (sf0.1); at sf1/sf3 the guard arms
-  *     against the committed bracket records (BENCH_SF1/SF3.json)
-  *     instead, so scale-bracket tables come out of one run with the
-  *     adjudication in-artifact rather than by hand (r15 item 4);
-  *   - the newest driver CORRECTNESS_r*.json's entry count rides in
-  *     the artifact ("correctness_artifact"), and an EMPTY one is
-  *     shouted to stderr — r15 closed on an empty {} artifact and the
-  *     round's correctness signal survived only because the judge
-  *     reran the gate by hand.
+  * Measurement discipline, the same for every query:
+  *   - cache cleared and heap GC'd before each query (outside the timed
+  *     region), so state leaked by a neighbor (broadcasts, CC-loop
+  *     checkpoints) is not charged to it;
+  *   - one untimed warm-up run (codegen, JIT, lazy staging), then
+  *     [[Reps]] timed runs; the query reports the median and IQR of
+  *     those runs, nothing is re-measured or adjusted afterwards;
+  *   - a query with any failed run reports -1 and lands in an "errors"
+  *     map, so a breakage is visible instead of distorting the total;
+  *   - "value" is staging_total + the sum of per-query medians: work
+  *     moved into a staged artifact still shows in the headline;
+  *   - per-query shuffle read/write and spill bytes of one timed run
+  *     ride along in a "shuffle" map (task-metrics listener);
+  *   - the JSON line is also written to BENCH_LAST.json, and a COMPACT
+  *     line ([[compactJson]]) is printed last, sized for a 2000-char
+  *     stdout tail.
+  *
+  * SPARK_GRAFT_ONLY=q20,d13,... restricts the run to those queries
+  * (prefix-or-full-name match); n_queries records the subset size.
   */
 object Bench {
+
+  /** Timed runs per query, after one untimed warm-up. */
+  val Reps = 5
 
   /** Fixed-precision format with trailing-zero strip. Zeros are only
     * stripped when a decimal point exists: at dp=0 the string is
@@ -75,66 +51,22 @@ object Bench {
     }
   }
 
-  /** Flat `"name": value` pairs from the frozen-baseline JSON,
-    * restricted to registry query names — restriction is what keeps
-    * metadata keys (`"frozen_at_round": 10`) out of the guard's
-    * comparisons. Regex, not a JSON parser, on purpose: the guard must
-    * never be the thing that breaks a bench run, and the file is a
-    * flat map this repo itself writes.
+  /** The q-quantile of a non-empty sample, interpolating linearly
+    * between order statistics (numpy's default), so an even sample's
+    * median is the mean of its two middle values.
     */
-  /** Number pattern for guard-map values: plain decimals plus an
-    * optional exponent — a sub-millisecond timing serialized as 1.2E-3
-    * must not silently drop out of the guard map (the same
-    * silent-non-parse failure mode parseRound was built to eliminate).
-    */
-  private val numRe = "[0-9.]+(?:[eE][+-]?[0-9]+)?"
-
-  private[graft] def parseFrozen(
-      txt: String, names: Set[String]): Map[String, Double] =
-    s""""([A-Za-z0-9_]+)"\\s*:\\s*($numRe)""".r.findAllMatchIn(txt)
-      .map(m => m.group(1) -> m.group(2).toDouble)
-      .filter { case (k, _) => names.contains(k) }.toMap
-
-  /** Per-query seconds from a committed round artifact (BENCH_r*.json).
-    * These are DRIVER snapshots, not our long line: the compact stdout
-    * line lands under a "parsed" object with PREFIX keys
-    * (`"keys":"prefix"`; `"d19":10.03`, never `"d19_lsh_tuning"`) —
-    * the degradation compactJson applies once full names overflow the
-    * ~2000-char tail. parseFrozen filtered those keys against FULL
-    * registry names and returned empty, so the round-over-round guard
-    * never armed (r14 verdict item 1: d19's 1.94x drift sailed through
-    * unrepolled). Two fixes over parseFrozen:
-    *   - parse only inside flat `"queries":{...}` objects — the
-    *     artifact's "staging" map carries a "t15" key that would
-    *     otherwise collide with query t15_v2_pushdown's prefix, and
-    *     "value"/"n" metadata are kept out structurally instead of by
-    *     name-filter luck (escaped copies inside the "tail" string
-    *     never match: their quotes are `\"`);
-    *   - translate a prefix key back to its registry full name with
-    *     the SAME mapping the emitter uses (`name.takeWhile(_ != '_')`,
-    *     unique per query by the registry naming convention); an
-    *     ambiguous prefix is dropped, never guessed.
-    * Values are the driver's 2-dp echo of our minima — plenty for a
-    * 1.5x floor. Min across occurrences if a text ever carries several
-    * queries objects. Errored queries' -1 sentinels never parse (no
-    * '-' in the number class), so they cannot arm a negative floor.
-    */
-  private[graft] def parseRound(
-      txt: String, names: Set[String]): Map[String, Double] = {
-    val byPrefix: Map[String, String] =
-      names.groupBy(_.takeWhile(_ != '_'))
-        .collect { case (p, ns) if ns.size == 1 => p -> ns.head }
-    """"queries"\s*:\s*\{([^{}]*)\}""".r.findAllMatchIn(txt)
-      .flatMap(b =>
-        s""""([A-Za-z0-9_]+)"\\s*:\\s*($numRe)""".r.findAllMatchIn(b.group(1))
-          .flatMap { m =>
-            val k = m.group(1)
-            (if (names.contains(k)) Some(k) else byPrefix.get(k))
-              .map(_ -> m.group(2).toDouble)
-          })
-      .toSeq.groupBy(_._1)
-      .map { case (k, vs) => k -> vs.map(_._2).min }
+  private[graft] def quantile(xs: Seq[Double], q: Double): Double = {
+    val s = xs.sorted
+    val h = (s.size - 1) * q
+    val lo = h.toInt
+    s(lo) + (h - lo) * (s(math.min(lo + 1, s.size - 1)) - s(lo))
   }
+
+  /** Median and interquartile range of one query's timed runs. */
+  private[graft] final case class Summary(median: Double, iqr: Double)
+
+  private[graft] def summarize(xs: Seq[Double]): Summary =
+    Summary(quantile(xs, 0.5), quantile(xs, 0.75) - quantile(xs, 0.25))
 
   private final class MetricsTap extends SparkListener {
     val read = new AtomicLong
@@ -153,72 +85,39 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE coalescing stays parallelism-first (the Spark default).
-      // Advisory-size coalescing (parallelismFirst=false, guide §2.2
-      // "fewer, larger reduce partitions") was TRIED for the r21
-      // finding that 13 sub-second queries ran ~2x faster on 8 cores
-      // than 32 — and measured NET-NEGATIVE on a 20-query subset A/B
-      // at sf0.1 (36.5 -> 41.2 s): t4_wide_pivot 1.25 -> 5.33 s (its
-      // 73 MB shuffle coalesces to ~advisory/64MB = 1-2 partitions and
-      // the CPU-bound pivot stage loses the other 30 cores), d19 5.1
-      // -> 6.5, t9 1.9 -> 2.5, d3/d9/x36 +25-35%; the wins (st3 3.3 ->
-      // 2.5, s15 4.8 -> 4.1, d13/q30 -15%) don't cover them. With
-      // parallelism-first, tiny shuffles already coalesce toward the
-      // 1 MB minPartitionSize floor; the 8-core advantage at sf0.1 is
-      // scheduler/GC overhead, not reduce-partition count.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // AQE coalescing stays parallelism-first (the Spark default).
+    // Advisory-size coalescing (parallelismFirst=false, guide §2.2
+    // "fewer, larger reduce partitions") was TRIED for the r21
+    // finding that 13 sub-second queries ran ~2x faster on 8 cores
+    // than 32 — and measured NET-NEGATIVE on a 20-query subset A/B
+    // at sf0.1 (36.5 -> 41.2 s): t4_wide_pivot 1.25 -> 5.33 s (its
+    // 73 MB shuffle coalesces to ~advisory/64MB = 1-2 partitions and
+    // the CPU-bound pivot stage loses the other 30 cores), d19 5.1
+    // -> 6.5, t9 1.9 -> 2.5, d3/d9/x36 +25-35%; the wins (st3 3.3 ->
+    // 2.5, s15 4.8 -> 4.1, d13/q30 -15%) don't cover them. With
+    // parallelism-first, tiny shuffles already coalesce toward the
+    // 1 MB minPartitionSize floor; the 8-core advantage at sf0.1 is
+    // scheduler/GC overhead, not reduce-partition count.
+    val spark = Cli.session()
     val tap = new MetricsTap
     spark.sparkContext.addSparkListener(tap)
-    // session warmup so the first measured query doesn't absorb
-    // scheduler/codegen/parquet-footer init (one-time JVM cost was
-    // ~5s charged to whichever query ran first)
-    locally {
-      import org.apache.spark.sql.functions._
-      // best-effort: a bad SF dir must not kill the run before the
-      // JSON metric line is emitted (per-query failures are caught too)
-      try {
-        spark.range(1000000L).select(sum(col("id"))).collect()
-        Tables(spark, sfDir, "region").groupBy("r_name").count().collect()
-        // JIT/codegen-warm the connected-components loop on a toy edge
-        // list: the CC machinery (per-round join+agg+observe+checkpoint)
-        // takes 2-3 executions to reach steady state, and whichever CC
-        // query ran first in the session absorbed ~7-14s of that warmup
-        // even at sf0.001 (min-of-2 didn't recover — both runs were
-        // partially cold). One-time JVM cost, so it belongs here, not
-        // in any query's timing.
-        import spark.implicits._
-        val toyEdges = Seq((1L, 2L), (2L, 3L), (4L, 5L)).toDF("a", "b")
-        operators.Graph.connectedComponents(toyEdges, "a", "b").collect()
-      } catch { case _: Throwable => () }
-    }
 
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     def selected(name: String): Boolean = only.forall(s =>
       s.contains(name) || s.contains(name.takeWhile(_ != '_')))
 
-    // Pre-stage EVERY TempDirs.cached artifact in a dedicated pass
-    // BEFORE the per-query loop (r12 verdict item 1). The builds were
-    // already excluded from the recorded minima (they ran inside a
-    // discarded first rep) and their cost recorded in the staging map —
-    // but their SIDE-EFFECTS (executor heap churn, GC wake, build
-    // shuffle files) bled into the first touching query's own reps and
-    // its neighbors: d6's official 5.99 s vs 2.05 s in judge isolation,
-    // r11's c3/t14. Building everything up front, then clearing cache
-    // and GC'ing once, gives the timed loop a clean heap. The staging
-    // map is populated exactly as before (TempDirs times each build).
-    // Subset runs (SPARK_GRAFT_ONLY, e.g. targeted sf3 brackets) skip
-    // the artifacts their queries don't touch by default — the lazy
-    // in-rep path still works and still records — unless
-    // SPARK_GRAFT_PRESTAGE=1 forces the full pass.
-    if (only.isEmpty || sys.env.get("SPARK_GRAFT_PRESTAGE").contains("1")) {
+    def clearSession(): Unit =
+      try { spark.catalog.clearCache(); System.gc() }
+      catch { case NonFatal(_) => () }
+
+    // A full run builds every TempDirs.cached artifact in this pass,
+    // before the first query: a build's side-effects (executor heap
+    // churn, GC wake, build shuffle files) then never land inside a
+    // query's runs or its neighbors'. TempDirs times each build into
+    // the staging map. Subset runs skip this pass; their queries stage
+    // what they touch lazily, inside the untimed warm-up.
+    if (only.isEmpty) {
       val stagers: Seq[(String, () => Any)] = Seq(
         // shingles first: the pair scaffold reads the staged index and
         // the cluster build reads the staged pairs
@@ -244,227 +143,64 @@ object Bench {
         // best-effort: a failed build is recorded by TempDirs under a
         // FAILED staging key and retried lazily by the touching query
         try { run(); () }
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           System.err.println(s"Bench: prestage '$what' failed: $e") }
       }
-      try { spark.catalog.clearCache(); System.gc() }
-      catch { case _: Throwable => () }
     }
 
-    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    // one measured run: (seconds, shuffleRead, shuffleWrite, spill)
-    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : Option[(Double, Long, Long, Long)] = {
+    // toRdd.count(), NOT count(): a plain count() lets Catalyst prune
+    // every unreferenced column, eliminate sorts under the count
+    // aggregate, and drop left joins on unique grouped keys — for
+    // scalar-per-doc queries that pruned away the ENTIRE computation
+    // (x2 timed 0.13 s while its materialized cost is 1.31 s at sf0.1).
+    // toRdd materializes the full result plan: the cost a user pays for
+    // the table the query is FOR.
+    def run(fn: (SparkSession, String) => DataFrame): Unit = {
+      fn(spark, sfDir).queryExecution.toRdd.count(); ()
+    }
+    // one timed run: (seconds, shuffle read, shuffle write, spill)
+    def timed(fn: (SparkSession, String) => DataFrame): (Double, Long, Long, Long) = {
       GraftSparkShims.waitForListeners(spark.sparkContext)
       val (r0, w0, s0) = tap.snapshot
       val t0 = System.nanoTime()
-      try {
-        // toRdd.count(), NOT count(): a plain count() lets Catalyst
-        // prune every unreferenced column, eliminate sorts under the
-        // count aggregate, and drop left joins on unique grouped keys —
-        // for scalar-per-doc queries that pruned away the ENTIRE
-        // computation (x2 timed 0.13 s while its materialized cost is
-        // 1.31 s at sf0.1). toRdd materializes the full result plan —
-        // the cost a user pays for the table the query is FOR, and the
-        // same semantics ProfQuery has always used, so isolation A/Bs
-        // and bench entries are finally one currency. Baselines were
-        // re-frozen under this timing at round 10.
-        fn(spark, sfDir).queryExecution.toRdd.count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        GraftSparkShims.waitForListeners(spark.sparkContext)
-        val (r1, w1, s1) = tap.snapshot
-        Some((sec, r1 - r0, w1 - w0, s1 - s0))
-      } catch {
-        case e: Throwable =>
-          errors(name) = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}"
-          None
-      }
+      run(fn)
+      val sec = (System.nanoTime() - t0) / 1e9
+      GraftSparkShims.waitForListeners(spark.sparkContext)
+      val (r1, w1, s1) = tap.snapshot
+      (sec, r1 - r0, w1 - w0, s1 - s0)
     }
 
-    // Clear leaked session state before EVERY query, not just on family
-    // change: the round-7 official run inflated d3/d4/d11 2-3x over
-    // their warm-isolated cost (d4 6.1s official vs 2.3s ProfQuery) —
-    // same-family neighbors (d10/d8 run CC loops with per-round
-    // localCheckpoints) polluted the heap, and the per-FAMILY clear
-    // never fired inside the 13-query d family. The clear runs outside
-    // the timed region, so it costs wall-clock only, never metric time.
-    // SPARK_GRAFT_ONLY=q20,d13,... restricts the run to those queries
-    // (prefix-or-full-name match) — for targeted scale points (sf3) where
-    // the full registry would take hours; the artifact still records
-    // n_queries so a subset run can never be mistaken for a full one
-    var first = true
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => selected(name) }
-      .map { case (name, fn) =>
-      if (!first) {
-        try {
-          spark.catalog.clearCache()
-          System.gc() // lets ContextCleaner drop out-of-scope broadcasts
-        } catch { case _: Throwable => () }
-      }
-      first = false
-      val twoRuns = Seq(once(name, fn), once(name, fn)).flatten
-      // the currency is min-of-reps; when the two reps disagree by
-      // >40% one of them was polluted (JIT, GC, a neighbor's spilled
-      // broadcasts), so spend ONE more rep to resolve which — bounded
-      // extra wall, strictly-not-higher recorded minima, and the
-      // d12-class session swings (2.8 s warm vs 4.5 s recorded) stop
-      // reaching the artifact
-      val runs =
-        if (twoRuns.size == 2 &&
-            twoRuns.map(_._1).max > twoRuns.map(_._1).min * 1.4)
-          twoRuns ++ once(name, fn)
-        else twoRuns
-      // a query is an error ONLY if both runs failed; a transient
-      // single-run failure still yields a valid min timing, so drop its
-      // error entry to keep the documented "-1 + errors" contract
-      if (runs.isEmpty) name -> (-1.0, 0L, 0L, 0L)
-      else {
-        errors.remove(name)
-        val best = runs.minBy(_._1)
-        name -> (best._1, best._2, best._3, best._4)
-      }
-    }
-    // Pollution guard (r12 verdict item 2): the 2+1-on-disagreement
-    // rule misses SUSTAINED pollution — all of d6's r12 reps read ~6 s
-    // in one session region while its fresh-region floor is ~2.1 s.
-    // Any query whose official min exceeds its frozen-baseline entry
-    // (BASELINE_QUERIES.json, best-effort read; flat "name": value
-    // pairs, filtered to registry names) by >1.5x is re-measured in a
-    // fresh region — cache cleared + GC'd immediately before — and the
-    // recorded value is the min across both regions: strictly-not-
-    // higher minima. The adjudication is visible in the artifact as
-    // "repolled":{name:{"official":x,"fresh":y}}, so a flagged entry
-    // either carries its fresh-region number or documents that the
-    // fresh region CONFIRMED the official one (a real regression).
-    // BOTH reference maps only exist at the baseline's scale factor:
-    // the frozen map AND every BENCH_r*.json artifact were recorded at
-    // sf0.1, so at sf1/sf3 bracket runs every query legitimately reads
-    // >1.5x and an ungated guard would repoll the whole selection —
-    // two extra timed runs per query and min-of-4 minima that bias the
-    // scale-bracket ratios low (r13 ADVICE, medium).
-    val sfShortName = new java.io.File(sfDir).getName
-    val atBaselineSf = sfShortName == "sf0.1"
-    val queryNames = results.map(_._1).toSet
-    // Artifacts are resolved from the repo root (the directory holding
-    // build.sbt), not the bare working directory — a bench launched
-    // from a subdirectory must not silently lose both guard maps.
-    val repoRoot: java.io.File =
-      Iterator.iterate(new java.io.File(".").getCanonicalFile)(_.getParentFile)
-        .takeWhile(_ != null)
-        .find(d => new java.io.File(d, "build.sbt").isFile)
-        .getOrElse(new java.io.File(".").getCanonicalFile)
-    val baselineTxt: String = if (!atBaselineSf) "" else try {
-      new String(java.nio.file.Files.readAllBytes(
-        new java.io.File(repoRoot, "BASELINE_QUERIES.json").toPath), "UTF-8")
-    } catch { case _: Throwable => "" }
-    val frozen: Map[String, Double] =
-      try parseFrozen(baselineTxt, results.map(_._1).toSet)
-      catch { case _: Throwable => Map.empty }
-    // Job-floor threshold (r16 verdict item 6): the baseline file's
-    // "floor_s" names the wall time below which a query's measurement
-    // on this box is dominated by job-launch/scheduler overhead, not by
-    // its plan (observed 0.2-0.55 s at local[32]; t7/x22/t5/q9 read
-    // 1.5-1.7x frozen every round with the repoll guard confirming
-    // identical fresh-region times). Entries where BOTH the frozen
-    // value and this run's value sit under the floor are emitted in a
-    // "floor_bound" list so ratio reports can separate scheduler noise
-    // from real regressions. A regression that climbs ABOVE the floor
-    // is never masked (its current value disqualifies it).
-    val floorS: Double =
-      """"floor_s"\s*:\s*([0-9.]+)""".r.findFirstMatchIn(baselineTxt)
-        .map(_.group(1).toDouble).getOrElse(0.0)
-    // Round-over-round guard (r13 verdict item 2): a regression that
-    // stays under a LOOSE frozen entry sails through the frozen-only
-    // guard unexamined (r13's t3 0.67 -> 1.59 s was still 0.54x
-    // frozen). Compare against the per-query MIN across the last TWO
-    // round artifacts on disk, so a one-round drift is adjudicated the
-    // round after it appears even if that round's entry already
-    // absorbed it. Filesystem presence IS the contract: the driver
-    // writes BENCH_r{N}.json only after this very run exits, so the
-    // in-progress round can never see its own artifact, and a
-    // hand-placed uncommitted artifact arming the guard is exactly the
-    // behavior a local what-if rerun wants. Round artifacts need
-    // parseRound (prefix-keyed driver snapshots), NOT parseFrozen —
-    // full-name filtering parsed nothing from them (r14 verdict 1).
-    val prevRounds: Map[String, Double] = if (!atBaselineSf) Map.empty else try {
-      val names = queryNames
-      val files = repoRoot.listFiles()
-        .filter(f => f.getName.matches("BENCH_r\\d+\\.json"))
-        .sortBy(f => f.getName.replaceAll("\\D", "").toInt)
-        .takeRight(2)
-      files.map(f => parseRound(new String(
-          java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"), names))
-        .foldLeft(Map.empty[String, Double]) { (acc, m) =>
-          (acc.keySet ++ m.keySet).map(k =>
-            k -> math.min(acc.getOrElse(k, Double.MaxValue),
-              m.getOrElse(k, Double.MaxValue))).toMap
-        }.filter(_._2 > 0.0) // -1 error sentinels must not arm the guard
-    } catch { case _: Throwable => Map.empty }
-    // Scale-bracket guard (r15 verdict item 4): sf1/sf3 in-bench
-    // numbers carried 2-4x session pollution that needed hand
-    // adjudication every round (q19 53->11 s, t4 52->14 s isolated).
-    // When the run's SF has a committed bracket record (BENCH_SF1/
-    // BENCH_SF3.json — our own full-name long lines, re-frozen whenever
-    // the registry grows), the repoll guard arms against it exactly
-    // like the sf0.1 frozen map, so SCALE.md tables come out of one run
-    // with the adjudication in the artifact's "repolled" map.
-    val bracketRecord: Map[String, Double] = if (atBaselineSf) Map.empty else {
-      val file = sfShortName match {
-        case "sf1" => Some("BENCH_SF1.json")
-        case "sf3" => Some("BENCH_SF3.json")
-        case _ => None
-      }
-      file.map { fn =>
-        try parseRound(new String(java.nio.file.Files.readAllBytes(
-          new java.io.File(repoRoot, fn).toPath), "UTF-8"), queryNames)
-          .filter(_._2 > 0.0)
-        catch { case _: Throwable => Map.empty[String, Double] }
-      }.getOrElse(Map.empty)
-    }
-    def guardFloor(name: String): Option[Double] =
-      (frozen.get(name).toSeq ++ prevRounds.get(name).toSeq ++
-        bracketRecord.get(name).toSeq)
-        .reduceOption((a, b) => math.min(a, b))
-    val repolled = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double)]
-    val finalResults = results.map { case (name, best @ (v, _, _, _)) =>
-      guardFloor(name).filter(f => v > f * 1.5) match {
-        case Some(_) =>
-          try { spark.catalog.clearCache(); System.gc() }
-          catch { case _: Throwable => () }
-          val fn = SparkEntry.queries(name)
-          val freshRuns = Seq(once(name, fn), once(name, fn)).flatten
-          errors.remove(name) // the official region already succeeded
-          if (freshRuns.isEmpty) { repolled(name) = (v, -1.0); name -> best }
-          else {
-            val fb = freshRuns.minBy(_._1)
-            repolled(name) = (v, fb._1)
-            name -> (if (fb._1 < v) fb else best)
-          }
-        case None => name -> best
-      }
-    }
-    val ok = finalResults.filter(_._2._1 >= 0.0)
-    val total = ok.map(_._2._1).sum
-    val qs = finalResults.map { case (k, (v, _, _, _)) => s""""$k":$v""" }
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    // name -> (summary of the timed runs, (read, write, spill) of the last)
+    val results: Seq[(String, Option[(Summary, (Long, Long, Long))])] =
+      SparkEntry.queries.toSeq.sortBy(_._1)
+        .filter { case (name, _) => selected(name) }
+        .map { case (name, fn) =>
+          clearSession()
+          name -> (try {
+            run(fn)
+            val runs = Seq.fill(Reps)(timed(fn))
+            val (_, r, w, s) = runs.last
+            Some((summarize(runs.map(_._1)), (r, w, s)))
+          } catch { case NonFatal(e) =>
+            errors(name) = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}"
+            None
+          })
+        }
+
+    val medians = results.map { case (k, r) => k -> r.fold(-1.0)(_._1.median) }
+    val ok = results.flatMap(_._2.map(_._1))
+    val stagingTotal = TempDirs.stagingSeconds.values.sum
+    val total = stagingTotal + ok.map(_.median).sum
+    def pct(q: Double): String =
+      if (ok.isEmpty) "-1" else trim(quantile(ok.map(_.median), q), 3)
+    val qs = medians.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+    val iqrs = results.map { case (k, r) => s""""$k":${r.fold(-1.0)(_._1.iqr)}""" }
       .mkString("{", ",", "}")
-    val sh = finalResults.map { case (k, (_, r, w, s)) =>
-      s""""$k":{"read":$r,"write":$w,"spill":$s}"""
+    val sh = results.map { case (k, r) =>
+      val (rd, w, s) = r.fold((0L, 0L, 0L))(_._2)
+      s""""$k":{"read":$rd,"write":$w,"spill":$s}"""
     }.mkString("{", ",", "}")
-    val repolledJson = repolled.map { case (k, (o, f)) =>
-      s""""$k":{"official":${trim(o, 3)},"fresh":${trim(f, 3)}}"""
-    }.mkString("{", ",", "}")
-    // ratio exemption (r17 advice): a genuine multi-x regression that
-    // still lands under the floor (e.g. frozen 0.1 -> 0.59) must NOT
-    // be classified scheduler noise — entries over 3x frozen surface
-    // in the regression list even when both values sit under floor_s
-    // (the real floor entries read 1.5-1.7x, well inside the bound)
-    val floorBoundJson = finalResults.collect {
-      case (name, (v, _, _, _))
-        if floorS > 0 && v >= 0 && v < floorS &&
-          frozen.get(name).exists(f =>
-            f < floorS && f > 0 && v / f <= 3.0) => s""""$name""""
-    }.mkString("[", ",", "]")
     // full JSON string escaping: exception messages carry newlines and
     // other control characters (plan fragments), which would otherwise
     // make the artifact unparseable exactly when it matters most
@@ -477,72 +213,32 @@ object Bench {
     val errJson = errors.map { case (k, v) =>
       s""""$k":"${jsonEscape(v)}""""
     }.mkString("{", ",", "}")
-    // one-time TempDirs.cached builds (staged cluster table, synthesized
-    // packet frame, JSONL exports, ...) run inside a discarded first rep
-    // under min-of-reps — this map is where that cost is recorded, so
-    // the artifact's total + staging is the honest session price and
-    // cross-round comparisons don't silently credit staging moves
     val stagingJson = TempDirs.stagingSeconds.toSeq.sortBy(_._1)
       .map { case (k, v) => s""""$k":${trim(v, 3)}""" }
       .mkString("{", ",", "}")
-    val stagingTotal = TempDirs.stagingSeconds.values.sum
-    // Newest driver correctness artifact health: r15 closed green on
-    // an EMPTY CORRECTNESS_r15.json ({}), so the entry count now rides
-    // in every bench artifact and an empty one is shouted to stderr —
-    // the judge sees the defect in the same file they read the timings
-    // from. Top-level-key count is enough (the artifact is a flat
-    // {query: {...}} map); a parse failure reports -1, never kills the
-    // bench.
-    val corrArtJson: String = try {
-      repoRoot.listFiles()
-        .filter(f => f.getName.matches("CORRECTNESS_r\\d+\\.json"))
-        .sortBy(f => f.getName.replaceAll("\\D", "").toInt)
-        .lastOption.map { f =>
-          val round = f.getName.replaceAll("\\D", "").toInt
-          val txt = new String(
-            java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-          // top-level keys: "name": { — value-object braces keep
-          // nested keys like "rows_match" from matching (they are
-          // followed by booleans/numbers, not '{')
-          val entries =
-            """"([A-Za-z0-9_]+)"\s*:\s*\{""".r.findAllMatchIn(txt).size
-          if (entries == 0)
-            System.err.println(
-              s"Bench: WARNING — newest correctness artifact ${f.getName} " +
-                s"parses to ZERO entries (the r15 failure mode); " +
-                s"run scripts/preflight.sh so CORRECTNESS_LOCAL_r*.json " +
-                s"preserves the signal")
-          s"""{"round":$round,"entries":$entries}"""
-        }.getOrElse("""{"round":-1,"entries":-1}""")
-    } catch { case _: Throwable => """{"round":-1,"entries":-1}""" }
     // n_success/n_errors make the total self-describing: "value" sums
-    // only successful queries (errored ones carry a -1.0 sentinel), so
-    // a round-over-round total comparison without these counts silently
-    // understates a partial-failure regression (r9 ADVICE)
+    // only successful queries, so a total comparison without these
+    // counts silently understates a partial-failure regression
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec",""" +
-        s""""n_queries":${finalResults.size},"n_success":${ok.size},""" +
-        s""""n_errors":${finalResults.size - ok.size},"queries":$qs,""" +
-        s""""sf":"$sfDir","runs_per_query":"2+1-on-disagreement",""" +
+        s""""n_queries":${results.size},"n_success":${ok.size},""" +
+        s""""n_errors":${results.size - ok.size},"reps":$Reps,""" +
+        s""""query_p50":${pct(0.5)},"query_p90":${pct(0.9)},""" +
+        s""""queries":$qs,"iqr":$iqrs,"sf":"$sfDir",""" +
         s""""staging":$stagingJson,"staging_total":${trim(stagingTotal, 3)},""" +
-        s""""repolled":$repolledJson,""" +
-        s""""floor_s":$floorS,"floor_bound":$floorBoundJson,""" +
-        s""""correctness_artifact":$corrArtJson,""" +
         s""""errors":$errJson,"shuffle":$sh}"""
     try {
       java.nio.file.Files.write(
         java.nio.file.Paths.get("BENCH_LAST.json"),
         (line + "\n").getBytes("UTF-8"))
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
     println(line)
     spark.stop()
     // The compact line is deliberately LAST — after spark.stop(), so no
     // shutdown logging can follow it.
     // basename is enough — the harness records the sf point itself
     val sfShort = new java.io.File(sfDir).getName
-    println(compactJson(
-      finalResults.map { case (k, (v, _, _, _)) => k -> v }, total, sfShort,
-      errJson, stagingTotal = stagingTotal))
+    println(compactJson(medians, total, sfShort, errJson, stagingTotal = stagingTotal))
     System.out.flush()
   }
 

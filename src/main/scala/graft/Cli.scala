@@ -13,7 +13,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Cli {
 
-  private def session(): SparkSession = {
+  /** The one local session every main builds: `local[SPARK_GRAFT_CPUS]`
+    * (default 4, BASELINE.md), as many shuffle partitions as cores, UTC.
+    */
+  private[graft] def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val s = SparkSession.builder()
       .master(s"local[$cpus]")

@@ -24,8 +24,11 @@ object Pipeline {
 
   type Stage = DataFrame => DataFrame
 
-  case class StageResult(
-      name: String, status: String, rowsOut: Long, elapsedS: Double)
+  /** One stage's outcome. Spark fuses stages into one plan, so there is
+    * no per-stage time here; the whole run's time is
+    * [[PipelineResult.elapsedS]].
+    */
+  case class StageResult(name: String, status: String, rowsOut: Long)
 
   case class PipelineResult(
       status: String,
@@ -95,7 +98,7 @@ object Pipeline {
       names.zipWithIndex.foreach { case (n, i) =>
         stageResults += StageResult(
           n, if (dryRun) "skipped" else "success",
-          observed.getOrElse(s"stage_${i}_$n", -1L), elapsed)
+          observed.getOrElse(s"stage_${i}_$n", -1L))
       }
       hooks.fire("pipeline.complete", Map("rows" -> rows))
       PipelineResult(

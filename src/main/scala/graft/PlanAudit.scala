@@ -1,15 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Dev tool: dump formatted plans for representative queries so the
   * pushdown/broadcast/codegen posture is inspectable per round.
   * Usage: runMain graft.PlanAudit [sfDir [queryName...]]
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Cli.session()
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val names =
       if (args.length > 1) args.drop(1).toSeq

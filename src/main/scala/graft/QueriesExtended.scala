@@ -1553,9 +1553,8 @@ object QueriesExtended {
       nprobeOf = k => Clustering.fractionNprobe(auditCellFraction, k),
       screened = true)
 
-  /** s22's probe fraction — mirrored verbatim in its oracle SQL.
-    * `private[graft]` so dev probes (ProfBoundedEval) reference THIS
-    * definition instead of hardcoding a copy that could drift.
+  /** s22's probe fraction — the one definition its oracle SQL reads,
+    * so the two cannot drift.
     */
   private[graft] val auditCellFraction = 0.25
 
@@ -1565,14 +1564,14 @@ object QueriesExtended {
   private[graft] val auditTau = 0.3
 
   /** `screened` picks the pair-scoring strategy (r21, measured — the
-    * results are identical either way, ProfQuery warm minima on
-    * /tmp/sf10, this box):
+    * results are identical either way; warm isolated minima at sf10,
+    * OPTIMIZATION_r21.md):
     *
     *   - true (s22 fraction mode): the cell-blocked join ships int8
     *     codes + one scale (~90 B/row vs 512-byte f64 unit vectors),
     *     rejects pairs on an i8 dot plus PairScreen's conservative
     *     bound, and re-scores the survivors (the audit threshold
-    *     keeps ~7.5% of pairs — ProfScreen, sf3) with the exact f64
+    *     keeps ~7.5% of pairs at sf3, SCALE.md r21) with the exact f64
     *     dot via vector re-attach joins. Fraction mode is pair-heavy
     *     BY DESIGN (n_t·n_e·f), so the i8 saving on the ~92% rejected
     *     mass dominates: s22 sf10 54.5 -> 26.8 s (2.0x).

@@ -5,7 +5,7 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skew-resilience evidence for the dedup candidate joins (d2/d4/d6):
@@ -26,16 +26,15 @@ import org.apache.spark.sql.functions._
   */
 object SkewBench {
 
-  /** Per-stage task metrics: (duration ms, shuffle read B, shuffle write B). */
+  /** Per-stage task metrics: (duration ms, shuffle read B). */
   private final class StageTap extends SparkListener {
-    val stages = new ConcurrentHashMap[Int, ArrayBuffer[(Long, Long, Long)]]()
+    val stages = new ConcurrentHashMap[Int, ArrayBuffer[(Long, Long)]]()
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
       val m = e.taskMetrics
       if (m != null) {
         stages.computeIfAbsent(e.stageId, _ => ArrayBuffer.empty).synchronized {
           stages.get(e.stageId) +=
-            ((m.executorRunTime, m.shuffleReadMetrics.totalBytesRead,
-              m.shuffleWriteMetrics.bytesWritten))
+            ((m.executorRunTime, m.shuffleReadMetrics.totalBytesRead))
         }
       }
     }
@@ -66,14 +65,7 @@ object SkewBench {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val skewFrac = if (args.length > 1) args(1).toDouble else 0.05
     val reps = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Cli.session()
     val tap = new StageTap
     spark.sparkContext.addSparkListener(tap)
 
@@ -114,7 +106,7 @@ object SkewBench {
       (label, dir) <- Seq("base" -> baseDir, "skew" -> skewDir)
     } {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcast)
-      var best: Option[(Double, Long, Map[Int, Seq[(Long, Long, Long)]], String)] = None
+      var best: Option[(Double, Long, Map[Int, Seq[(Long, Long)]], String)] = None
       for (_ <- 1 to reps) {
         spark.catalog.clearCache(); System.gc()
         tap.clear()
@@ -153,14 +145,6 @@ object SkewBench {
         }
       // AQE's skew-join splitter marks rewritten joins in the final plan
       val aqeSkew = "skew=true".r.findAllIn(plan.split("== Initial Plan ==")(0)).size
-      if (sys.env.contains("SKEW_DEBUG")) {
-        stages.toSeq.sortBy(_._1).foreach { case (sid, ts) =>
-          val reads = ts.map(_._2)
-          println(f"    stage $sid: ${ts.size} tasks, runtime ${ts.map(_._1).sum}ms, " +
-            f"read ${reads.sum / 1024}K (max ${reads.max / 1024}K), " +
-            f"write ${ts.map(_._3).sum / 1024}K")
-        }
-      }
       println(f"| $name | $label | $cfg | $rows%d | $sec%.2f | ${heavy.size}%d " +
         f"| ${median(durs)}%d/${durs.max}%d | $worstShuf | $spread | $aqeSkew |")
     }

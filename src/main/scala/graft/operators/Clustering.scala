@@ -695,7 +695,7 @@ object Clustering {
     // and measured 2.4x SLOWER warm at sf3 (3.8 -> 9.0 s isolated).
     // Within-cell pairs cluster around their shared centroid, so at
     // the fixture's tau 22% of ALL pairs genuinely qualify and 8%
-    // more sit inside the bound's uncertainty band (ProfScreen, sf3:
+    // more sit inside the bound's uncertainty band (SCALE.md r21, sf3:
     // 11.4M pairs, 2.5M >= tau, 937k band at avg bound 0.021) — the
     // re-attach rescore join then processes millions of pair rows
     // where the r20 shape computes the exact dot in-stage for free.

@@ -62,8 +62,7 @@ object EventStreaming {
     val out = graft.TempDirs.fresh(s"graft_${tag}_sink")
     val ckpt = graft.TempDirs.fresh(s"graft_${tag}_ckpt")
     val result = transform(stream)
-    val query = withStreamConfs(spark,
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", hint.toString)) {
+    val query = withStatePartitions(spark, hint) {
       result.writeStream
         .format("parquet")
         .option("path", out)
@@ -95,35 +94,22 @@ object EventStreaming {
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], result.schema)
   }
 
-  /** Confs a stateful streaming query captures at start(): shuffle
-    * partitions (= state-store instance count) and the state-store
-    * provider. Set around `start`, restored immediately after — the
-    * rest of the shared session keeps the batch settings.
+  /** The conf a stateful streaming query captures at start(): shuffle
+    * partitions (= state-store instance count). Set around `start`,
+    * restored immediately after — the rest of the shared session keeps
+    * the batch settings.
     *
-    * SPARK_GRAFT_STATE_STORE=rocksdb switches to the in-box
-    * RocksDBStateStoreProvider (rocksdbjni ships with Spark). Default
-    * stays the HDFS-backed in-memory provider: at our gate scales the
-    * state fits comfortably in memory and RocksDB's per-batch
-    * checkpoint/compaction overhead only pays off when state exceeds
-    * executor memory — measured on st2/st4/st7 at sf1/sf3, see
-    * SCALE.md r17.
+    * The state store stays Spark's default HDFS-backed in-memory
+    * provider. RocksDBStateStoreProvider was measured on st2/st4/st7 at
+    * sf1/sf3 (SCALE.md r17): at these scales the state fits in memory,
+    * and RocksDB's per-batch checkpoint/compaction overhead only pays
+    * off once state exceeds executor memory.
     */
-  private def withStreamConfs[T](
-      spark: SparkSession, partitions: String)(start: => T): T = {
-    val providerConf = "spark.sql.streaming.stateStore.providerClass"
-    val savedPartitions = spark.conf.get("spark.sql.shuffle.partitions")
-    val savedProvider = spark.conf.getOption(providerConf)
-    spark.conf.set("spark.sql.shuffle.partitions", partitions)
-    if (sys.env.get("SPARK_GRAFT_STATE_STORE").contains("rocksdb"))
-      spark.conf.set(providerConf,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try start finally {
-      spark.conf.set("spark.sql.shuffle.partitions", savedPartitions)
-      savedProvider match {
-        case Some(p) => spark.conf.set(providerConf, p)
-        case None    => spark.conf.unset(providerConf)
-      }
-    }
+  private def withStatePartitions[T](
+      spark: SparkSession, partitions: Int)(start: => T): T = {
+    val saved = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", partitions.toString)
+    try start finally spark.conf.set("spark.sql.shuffle.partitions", saved)
   }
 
   /** Per-dir memo of the events source metadata both drains re-derive
@@ -214,9 +200,7 @@ object EventStreaming {
     // per-query scoping we want; answers are partitioning-independent.
     // At production stream volumes this knob rises with throughput —
     // runToMemorySink sizes it from the source file (see hint there).
-    val query = withStreamConfs(spark,
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS",
-        statePartitions.toString)) {
+    val query = withStatePartitions(spark, statePartitions) {
       streamed.writeStream
         .format("memory")
         .queryName(queryName)

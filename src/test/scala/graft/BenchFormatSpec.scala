@@ -27,115 +27,22 @@ class BenchFormatSpec extends AnyFunSuite {
       .asInstanceOf[Map[String, Any]]
   }
 
-  test("frozen-baseline parse: registry names only, metadata keys excluded") {
-    val txt =
-      """{
-        | "frozen_at_round": 10,
-        | "queries": {
-        |  "q1_agg": 1.046,
-        |  "d6_simhash_pairs": 2.656,
-        |  "x22_hash_split": 0.124
-        | }
-        |}""".stripMargin
-    val got = Bench.parseFrozen(txt, Set("q1_agg", "d6_simhash_pairs", "nope"))
-    assert(got == Map("q1_agg" -> 1.046, "d6_simhash_pairs" -> 2.656))
-    // metadata keys and non-registry names never reach the guard
-    assert(!got.contains("frozen_at_round") && !got.contains("x22_hash_split"))
-    // garbage input degrades to empty, never throws (the guard must not
-    // be able to break a bench run)
-    assert(Bench.parseFrozen("not json at all", Set("q1_agg")).isEmpty)
-  }
-
-  test("round-artifact parse: real prefix-keyed driver snapshot shape") {
-    // Fixture copied from BENCH_r14.json's actual structure: the driver
-    // stores {"n","rc","cpus","sf","tail","parsed"} where "tail" is an
-    // ESCAPED copy of our stdout and "parsed" is the compact line with
-    // PREFIX-keyed queries ("keys":"prefix") plus a staging map whose
-    // "t15" key collides with query t15_v2_pushdown's prefix. The r14
-    // guard parsed nothing from this shape (full-name filter) and so
-    // never armed — this fixture fails any parser that doesn't read
-    // the real format.
-    val txt =
-      """{
-        |  "n": 14,
-        |  "rc": 0,
-        |  "cpus": 32,
-        |  "sf": 0.1,
-        |  "tail": "...\"queries\":{\"d19\":99.0,\"t15\":99.0}...",
-        |  "parsed": {"metric": "total", "value": 124.17, "unit": "sec",
-        |    "sf": "sf0.1", "n_queries": 146, "keys": "prefix",
-        |    "queries_file": "BENCH_LAST.json",
-        |    "staging": {"shingles3": 5.704, "t15": 0.878},
-        |    "errors": {},
-        |    "queries": {"d19": 10.03, "t15": 3.2, "q1": 0.41,
-        |      "x22": -1, "zz": 7.7}}
-        |}""".stripMargin
-    val names = Set("d19_lsh_tuning", "t15_v2_pushdown", "q1_agg",
-      "x22_hash_split", "s6_range_search")
-    val got = Bench.parseRound(txt, names)
-    // prefix keys translate back to registry full names
-    assert(got == Map(
-      "d19_lsh_tuning" -> 10.03, "t15_v2_pushdown" -> 3.2,
-      "q1_agg" -> 0.41))
-    // staging's "t15":0.878 must NOT shadow query t15's 3.2 (it sits in
-    // a different object); "zz" maps to no registry prefix and drops;
-    // x22's -1 error sentinel never parses; the escaped tail copy's
-    // \"d19\":99.0 never matches (its quotes are escaped)
-    assert(!got.values.exists(v => v == 0.878 || v == 99.0 || v == 7.7))
-    // ambiguous prefixes are dropped, never guessed
-    val amb = Bench.parseRound(
-      """{"queries":{"d1":1.0}}""", Set("d1_exact", "d1_other"))
-    assert(amb.isEmpty)
-    // full-name artifacts (the long BENCH_LAST.json format) still parse
-    val full = Bench.parseRound(
-      """{"queries":{"q1_agg":1.25,"d6_simhash_pairs":-1.0},
-        |"staging":{"shingles3":5.2},
-        |"repolled":{"q1_agg":{"official":2.0,"fresh":1.25}}}"""
-        .stripMargin.replace("\n", ""),
-      Set("q1_agg", "d6_simhash_pairs"))
-    assert(full == Map("q1_agg" -> 1.25))
-    // garbage degrades to empty, never throws
-    assert(Bench.parseRound("not json", names).isEmpty)
-  }
-
-  test("round-artifact parse: the committed BENCH_r14.json itself") {
-    // The ultimate fixture is the real thing: r14's committed artifact
-    // is exactly the shape whose silent non-parse made the guard inert.
-    // Skipped (vacuously green) only if the artifact is ever pruned.
-    val f = new java.io.File("BENCH_r14.json")
-    if (f.isFile) {
-      val txt = new String(
-        java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      val got = Bench.parseRound(txt, SparkEntry.queries.keySet)
-      // the regression the guard was built to catch must be visible
-      assert(got.get("d19_lsh_tuning").contains(10.03), got.get("d19_lsh_tuning"))
-      // staging's t15 entry (0.878 in r14) must not shadow the query
-      // value (0.75 in r14's queries map)
-      assert(got.get("t15_v2_pushdown").contains(0.75), got.get("t15_v2_pushdown"))
-      // the whole 146-query registry of r14 must be recovered
-      assert(got.size >= 140, s"only ${got.size} queries parsed")
-    }
-  }
-
-  test("scale records carry a populated correctness stamp (no stale zero-entry alarms)") {
-    // A regenerated/re-floored BENCH_SF* record must re-stamp its
-    // correctness_artifact field: an `entries: 0` stamp reads as "these
-    // floors were never correctness-backed" to anyone auditing the
-    // artifact chain (the r18 verdict's hygiene finding).
-    for (p <- Seq("BENCH_SF1.json", "BENCH_SF3.json")) {
-      val f = new java.io.File(p)
-      if (f.isFile) {
-        val txt = new String(
-          java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-        val entries =
-          """"correctness_artifact"\s*:\s*\{[^}]*"entries"\s*:\s*(\d+)""".r
-        entries.findFirstMatchIn(txt) match {
-          case Some(m) => assert(m.group(1).toInt > 0,
-            s"$p: stale zero-entry correctness stamp - re-stamp on regeneration")
-          case None => fail(s"$p: no correctness_artifact stamp")
-        }
-      }
-    }
+  test("summarize: median and IQR of one query's runs; p50/p90 across queries") {
+    // odd n: the middle value, quartiles on order statistics
+    val odd = Bench.summarize(Seq(5.0, 1.0, 3.0, 2.0, 4.0))
+    assert(odd == Bench.Summary(median = 3.0, iqr = 2.0))
+    // even n: the mean of the two middle values, interpolated quartiles
+    val even = Bench.summarize(Seq(4.0, 1.0, 2.0, 3.0))
+    assert(even == Bench.Summary(median = 2.5, iqr = 1.5))
+    // one slow outlier moves neither the median nor the IQR much
+    assert(Bench.summarize(Seq(1.0, 1.0, 1.0, 1.0, 50.0)) ==
+      Bench.Summary(median = 1.0, iqr = 0.0))
+    assert(Bench.summarize(Seq(7.0)) == Bench.Summary(7.0, 0.0))
+    // registry-wide percentiles of the per-query medians
+    val medians = (1 to 11).map(_.toDouble)
+    assert(Bench.quantile(medians, 0.5) == 6.0)
+    assert(Bench.quantile(medians, 0.9) == 10.0)
+    assert(math.abs(Bench.quantile(Seq(0.2, 0.4, 0.6, 0.8), 0.9) - 0.74) < 1e-12)
   }
 
   test("compact line keeps the FULL registry via prefix keys when names overflow") {
