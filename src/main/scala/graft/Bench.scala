@@ -189,11 +189,10 @@ object Bench {
         }
 
     val medians = results.map { case (k, r) => k -> r.fold(-1.0)(_._1.median) }
-    val ok = results.flatMap(_._2.map(_._1))
+    val ok = results.flatMap(_._2.map(_._1.median))
     val stagingTotal = TempDirs.stagingSeconds.values.sum
-    val total = stagingTotal + ok.map(_.median).sum
-    def pct(q: Double): String =
-      if (ok.isEmpty) "-1" else trim(quantile(ok.map(_.median), q), 3)
+    val total = stagingTotal + ok.sum
+    def pct(q: Double): String = if (ok.isEmpty) "-1" else trim(quantile(ok, q), 3)
     val qs = medians.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
     val iqrs = results.map { case (k, r) => s""""$k":${r.fold(-1.0)(_._1.iqr)}""" }
       .mkString("{", ",", "}")
