@@ -148,6 +148,124 @@ object PropertySpec extends Properties("telemetry-kernels") {
     }
   }
 
+  // ---- differential: Calibration against the per-entry fold ----
+
+  /** The per-entry CASE-WHEN fold that `Calibration.apply` used to build,
+    * kept here as the reference: each entry wraps the three accumulated
+    * columns in `when(name = p AND raw IS NOT NULL, …).otherwise(acc)`.
+    */
+  private object FoldReference {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.functions.{coalesce, when}
+
+    def polynomial(raw: Column, coefficients: Seq[Double]): Column =
+      if (coefficients.isEmpty) raw
+      else coefficients.reverse.tail.foldLeft(lit(coefficients.last): Column)(
+        (acc, c) => acc * raw + lit(c))
+
+    def tableInterp(raw: Column, xs: Seq[Double], ys: Seq[Double]): Column = {
+      val segments = xs.zip(ys).sliding(2).collect {
+        case Seq((x0, y0), (x1, y1)) if x1 != x0 =>
+          (x1, lit(y0) + (raw - lit(x0)) * lit((y1 - y0) / (x1 - x0)))
+      }.toSeq
+      val belowOrFirst = when(raw <= lit(xs.head), lit(ys.head))
+      segments.foldLeft(belowOrFirst) {
+        case (acc, (x1, segExpr)) => acc.when(raw < lit(x1), segExpr)
+      }.otherwise(lit(ys.last))
+    }
+
+    def engExpr(raw: Column, e: CalibrationEntry): Column = e.method match {
+      case "polynomial" if e.coefficients.nonEmpty => polynomial(raw, e.coefficients)
+      case "table" if e.table_raw.nonEmpty => tableInterp(raw, e.table_raw, e.table_eng)
+      case _ => raw
+    }
+
+    def apply(samples: DataFrame, entries: Seq[CalibrationEntry]): DataFrame = {
+      val raw = col("raw_value")
+      val (eng, unit, calId) = entries.foldLeft(
+        (col("eng_value"), col("unit"), col("calibration_id"))) {
+        case ((engAcc, unitAcc, idAcc), e) =>
+          val hit = col("name") === e.parameter_name && raw.isNotNull
+          (when(hit, engExpr(raw, e)).otherwise(engAcc),
+            when(hit, coalesce(e.unit.map(lit).getOrElse(lit(null)), unitAcc)).otherwise(unitAcc),
+            when(hit, lit(e.method)).otherwise(idAcc))
+      }
+      samples
+        .withColumn("eng_value", eng)
+        .withColumn("unit", unit)
+        .withColumn("calibration_id", calId)
+    }
+  }
+
+  private val calNames = (0 to 9).map(i => s"p$i")
+  private val coarse: Gen[Double] = Gen.choose(-4, 4).map(_ * 25.0)
+  private val unitGen: Gen[Option[String]] = Gen.option(Gen.oneOf("V", "A", "degC"))
+
+  private def entryGen(name: String): Gen[CalibrationEntry] = Gen.oneOf(
+    for {
+      n <- Gen.choose(0, 4)
+      cs <- Gen.listOfN(n, Gen.choose(-3.0, 3.0))
+      u <- unitGen
+    } yield CalibrationEntry(name, "polynomial", u, coefficients = cs),
+    for {
+      n <- Gen.choose(0, 6)
+      xs <- Gen.listOfN(n, coarse)
+      ys <- Gen.listOfN(n, Gen.choose(-100.0, 100.0))
+      u <- unitGen
+    } yield CalibrationEntry(name, "table", u, table_raw = xs.sorted, table_eng = ys),
+    unitGen.map(u => CalibrationEntry(name, "identity", u)))
+
+  private val entriesGen: Gen[Seq[CalibrationEntry]] = for {
+    names <- Gen.someOf(calNames)
+    order <- Gen.listOfN(names.size, Gen.choose(0, Int.MaxValue))
+    entries <- Gen.sequence[List[CalibrationEntry], CalibrationEntry](
+      names.zip(order).sortBy(_._2).map(p => entryGen(p._1)))
+  } yield entries
+
+  private val rawGen: Gen[java.lang.Double] = Gen.frequency(
+    1 -> Gen.const(null),
+    1 -> Gen.const(java.lang.Double.valueOf(Double.NaN)),
+    2 -> coarse.map(java.lang.Double.valueOf),
+    4 -> Gen.choose(-130.0, 130.0).map(java.lang.Double.valueOf))
+
+  /** (id, name, raw_value, eng_value, unit, calibration_id); names p10
+    * and q have no entry, and nor does any p0–p9 the entries skip.
+    */
+  private val calSampleGen: Gen[Row] = for {
+    name <- Gen.oneOf(calNames ++ Seq("p10", "q"))
+    raw <- rawGen
+    eng <- Gen.oneOf(Gen.const(null), Gen.const(raw), Gen.choose(-1.0, 1.0).map(java.lang.Double.valueOf))
+    unit <- unitGen
+    id <- Gen.option(Gen.const("raw"))
+  } yield Row(0L, name, raw, eng, unit.orNull, id.orNull)
+
+  private val calSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "id BIGINT, name STRING, raw_value DOUBLE, eng_value DOUBLE, unit STRING, calibration_id STRING")
+
+  private type CalKey = (Long, Option[Long], Option[String], Option[String])
+
+  private def calKeys(df: DataFrame): Seq[CalKey] =
+    df.orderBy("id").collect().toSeq.map(r => (r.getLong(0),
+      Option(r.get(3)).map(v => java.lang.Double.doubleToLongBits(v.asInstanceOf[Double])),
+      Option(r.getString(4)), Option(r.getString(5))))
+
+  property("differential: Calibration equals the per-entry fold, row by row") =
+    Prop.forAllNoShrink(entriesGen, Gen.listOf(calSampleGen).map(_.take(60))) { (entries, rows) =>
+      val spark = graft.TestSpark.spark
+      val numbered = rows.zipWithIndex.map { case (r, i) =>
+        Row.fromSeq(i.toLong +: r.toSeq.tail) }
+      // an RDD scan runs generated code; a local relation is evaluated
+      // by the optimizer, through each expression's eval
+      val scanned = spark.createDataFrame(spark.sparkContext.parallelize(numbered, 2), calSchema)
+      val local = spark.createDataFrame(
+        java.util.Arrays.asList(numbered: _*), calSchema)
+      val expected = calKeys(FoldReference(scanned, entries))
+      val viaCodegen = calKeys(graft.operators.Calibration(scanned, entries))
+      val viaEval = calKeys(graft.operators.Calibration(local, entries))
+      ((viaCodegen == expected) :| s"codegen differs: $entries\n$viaCodegen\n$expected") &&
+        ((viaEval == expected) :| s"eval differs: $entries\n$viaEval\n$expected")
+    }
+
   // ---- differential: the in-memory walk vs the `ccsds` V2 source ----
 
   private val byteGen: Gen[Byte] = Gen.choose(-128, 127).map(_.toByte)
