@@ -132,7 +132,16 @@ object Registry {
         skipUnknownApids = bool(c, "skip_unknown_apids").getOrElse(true))
     },
     "calibration" -> { c => df =>
-      Calibration(df, (c \ "calibrations").extract[Seq[CalibrationEntry]])
+      val entries =
+        try (c \ "calibrations").extract[Seq[CalibrationEntry]]
+        catch {
+          // json4s reports a failed `require` in the entry's constructor
+          // as "unknown error"; the requirement's message names the entry
+          case e: MappingException =>
+            throw Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+              .collectFirst { case bad: IllegalArgumentException => bad }.getOrElse(e)
+        }
+      Calibration(df, entries)
     },
     // --- training-data stages (document pipelines) ---------------------
     "exact_dedup" -> { c => df =>

@@ -12,7 +12,12 @@ import org.apache.spark.sql.functions._
   * ParquetLoader/CsvLoader per-parameter mode → `partitionBy("name")`
   * (one directory per parameter instead of one file — same logical
   * content, scalable layout); `partition_by_apid` → additional
-  * `partitionBy("apid")`; append mode → native `mode("append")` (the
+  * `partitionBy("apid")`. The tidy sinks first cluster rows by those
+  * partition columns (a `rebalance` hint: one hash shuffle that AQE may
+  * split for a very large parameter), so each parameter lands in one or
+  * a few files instead of one per input partition. A range repartition
+  * is not used: its sampling job re-runs the upstream plan, and so its
+  * `observe` counts. Append mode → native `mode("append")` (the
   * reference's read-concat-rewrite is non-atomic; Spark's commit protocol
   * is the durable version of the same semantics).
   *
@@ -26,15 +31,21 @@ object Sinks {
       samples: DataFrame, dir: String,
       partitionByApid: Boolean = false, overwrite: Boolean = true): Unit = {
     val partCols = if (partitionByApid) Seq("name", "apid") else Seq("name")
-    samples
-      .select("name", "time_tai", "apid", "seq_count", "raw_value",
-        "eng_value", "unit", "validity", "out_of_limit", "alarm_level")
-      .sortWithinPartitions("time_tai")
-      .write
+    clustered(samples, partCols).write
       .partitionBy(partCols: _*)
       .mode(if (overwrite) "overwrite" else "append")
       .parquet(dir)
   }
+
+  /** The tidy columns, clustered by `partCols` and sorted by them and
+    * `time_tai` within each task, the order the partitioned writer needs.
+    */
+  private def clustered(samples: DataFrame, partCols: Seq[String]): DataFrame =
+    samples
+      .select("name", "time_tai", "apid", "seq_count", "raw_value",
+        "eng_value", "unit", "validity", "out_of_limit", "alarm_level")
+      .hint("rebalance", partCols.map(col): _*)
+      .sortWithinPartitions((partCols :+ "time_tai").map(col): _*)
 
   /** Wide sink (parquet.py wide mode → single pivoted table). */
   def writeWideParquet(wide: DataFrame, dir: String, overwrite: Boolean = true): Unit =
@@ -85,11 +96,7 @@ object Sinks {
   /** CSV sink (csv loader, header on, per-parameter partitioning). */
   def writeTidyCsv(
       samples: DataFrame, dir: String, overwrite: Boolean = true): Unit =
-    samples
-      .select("name", "time_tai", "apid", "seq_count", "raw_value",
-        "eng_value", "unit", "validity", "out_of_limit", "alarm_level")
-      .sortWithinPartitions("time_tai")
-      .write
+    clustered(samples, Seq("name")).write
       .option("header", "true")
       .partitionBy("name")
       .mode(if (overwrite) "overwrite" else "append")

@@ -83,4 +83,10 @@ case class CalibrationEntry(
   require(
     table_raw.size == table_eng.size,
     s"table_raw/table_eng size mismatch for $parameter_name")
+  // interpolation takes the first segment whose end exceeds raw, so an
+  // unsorted table would silently pick the wrong one
+  require(
+    !table_raw.exists(_.isNaN) && table_raw.zip(table_raw.drop(1)).forall { case (a, b) => a <= b },
+    s"table_raw for $parameter_name must be non-decreasing and free of NaN: " +
+      table_raw.mkString("[", ", ", "]"))
 }

@@ -127,6 +127,35 @@ class CliSpec extends SparkSpec {
     assert(back.select("unit").distinct().head().getString(0) == "degC")
   }
 
+  test("a calibration table whose table_raw is not sorted fails the run, naming the parameter") {
+    val dir = java.nio.file.Files.createTempDirectory("cli_badtable_in")
+    val out = java.nio.file.Files.createTempDirectory("cli_badtable_out").toString
+    Fixtures.writeHkFile(dir.resolve("hk.bin"), 10)
+    val decom = Registry.getTransformer("decom")(Registry.parseConfig(
+      """{"parameters": [
+        |  {"name": "obc_temp_dn", "apid": 256, "byte_offset": 0,
+        |   "bit_length": 16, "param_type": "uint"}
+        |]}""".stripMargin))
+    val cal = Registry.getTransformer("calibration")(Registry.parseConfig(
+      """{"calibrations": [
+        |  {"parameter_name": "obc_temp_dn", "method": "table",
+        |   "table_raw": [0.0, 4096.0, 2048.0], "table_eng": [0.0, 1.0, 2.0]}
+        |]}""".stripMargin))
+    val result = Pipeline.run(
+      spark,
+      extract = s => Registry.getExtractor("binary")(s, Registry.parseConfig(
+        s"""{"path": "${dir.toString}/hk.bin", "sec_hdr_length": 4}""")),
+      transforms = Seq("decom" -> decom, "calibration" -> cal),
+      load = df => {
+        Registry.getLoader("parquet")(df, Registry.parseConfig(s"""{"output_dir": "$out"}"""))
+        -1L
+      })
+    assert(!result.ok, result.summary)
+    assert(result.errors.exists(m =>
+      m.contains("obc_temp_dn") && m.contains("table_raw") && m.contains("non-decreasing")),
+      result.errors)
+  }
+
   test("loader-path run is ONE action: observe supplies rowsLoaded, no count() job") {
     val dir = java.nio.file.Files.createTempDirectory("cli_onejob_in")
     val out = java.nio.file.Files.createTempDirectory("cli_onejob_out").toString

@@ -1,7 +1,8 @@
 package graft
 
 /** `Pipeline.run` records non-fatal stage errors as a failed result and
-  * lets fatal JVM errors propagate, from stages and hooks alike.
+  * lets fatal JVM errors propagate, from stages and hooks alike; its
+  * observed stage counts see each row once.
   */
 class PipelineSpec extends SparkSpec {
 
@@ -28,5 +29,28 @@ class PipelineSpec extends SparkSpec {
     val result = run(_ => throw new RuntimeException("stage"), hooks)
     assert(result.status == "failed" && result.errors == Seq("stage"))
     assert(errors == Seq("stage"))
+  }
+
+  test("a partitioned parquet load observes extract and load rows once each") {
+    import graft.telemetry.Fixtures
+    val in = java.nio.file.Files.createTempDirectory("pipe_pq_in")
+    val out = java.nio.file.Files.createTempDirectory("pipe_pq_out").toString
+    Seq("a", "b", "c").foreach(f => Fixtures.writeHkFile(in.resolve(s"$f.bin"), 30))
+    val result = Pipeline.run(
+      spark,
+      extract = s => Registry.getExtractor("binary")(s, Registry.parseConfig(
+        s"""{"path": "$in", "sec_hdr_length": 4}""")),
+      transforms = Seq(
+        "decom" -> (df => operators.Decom(df, Fixtures.hkParamDefs)),
+        "calibration" -> (df => operators.Calibration(df, Fixtures.hkCalibrations))),
+      load = df => {
+        Registry.getLoader("parquet")(df, Registry.parseConfig(s"""{"output_dir": "$out"}"""))
+        -1L
+      })
+    assert(result.ok, result.summary)
+    assert(result.stages.map(s => s.name -> s.rowsOut) ==
+      Seq("extract" -> 90L, "decom" -> 360L, "calibration" -> 360L))
+    assert(result.rowsLoaded == 360L)
+    assert(spark.read.parquet(out).count() == 360L)
   }
 }

@@ -28,6 +28,37 @@ class SinksSpec extends SparkSpec {
     assert(spark.read.parquet(dir).count() == 160) // append accumulates
   }
 
+  test("tidy sinks cluster each parameter into at most 2 files; rows and layout unchanged") {
+    // four input partitions, as four pass files would give
+    val spread = samples.repartition(4)
+    val cols = Seq("name", "time_tai", "apid", "seq_count", "raw_value",
+      "eng_value", "unit", "validity", "out_of_limit", "alarm_level")
+    val expected = samples.select(cols.map(col): _*).collect().map(_.toSeq.toString).sorted.toSeq
+    def dataFiles(d: java.io.File) = d.listFiles().filter(_.getName.startsWith("part-")).toSeq
+
+    val pq = java.nio.file.Files.createTempDirectory("sink_cluster_pq").toFile
+    Sinks.writeTidyParquet(spread, pq.toString)
+    val nameDirs = pq.listFiles().filter(_.isDirectory).sortBy(_.getName).toSeq
+    assert(nameDirs.map(_.getName) == Fixtures.hkParamDefs.map("name=" + _.name).sorted)
+    nameDirs.foreach { d =>
+      val files = dataFiles(d)
+      assert(files.nonEmpty && files.size <= 2, s"${d.getName}: ${files.map(_.getName)}")
+      files.foreach { f =>
+        val times = spark.read.parquet(f.toString).select("time_tai").collect().map(_.getDouble(0)).toSeq
+        assert(times == times.sorted, s"${f.getName} is not in time order")
+      }
+    }
+    val back = spark.read.parquet(pq.toString).select(cols.map(col): _*)
+    assert(back.collect().map(_.toSeq.toString).sorted.toSeq == expected)
+
+    val csv = java.nio.file.Files.createTempDirectory("sink_cluster_csv").toFile
+    Sinks.writeTidyCsv(spread, csv.toString)
+    val csvDirs = csv.listFiles().filter(_.isDirectory).toSeq
+    assert(csvDirs.size == 4 && csvDirs.forall(d => dataFiles(d).size <= 2),
+      csvDirs.map(d => d.getName -> dataFiles(d).size))
+    assert(spark.read.option("header", "true").csv(csv.toString).count() == 80)
+  }
+
   test("apid-partitioned layout adds apid subdirectories") {
     val dir = java.nio.file.Files.createTempDirectory("sink_apid").toString
     Sinks.writeTidyParquet(samples, dir, partitionByApid = true)

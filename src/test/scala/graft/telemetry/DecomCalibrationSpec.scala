@@ -120,6 +120,57 @@ class DecomCalibrationSpec extends SparkSpec {
     assert(eng == Seq(-2.0, -1.5, 0.0, 2.0))
   }
 
+  test("duplicate names: the last entry wins for eng_value, unit and calibration_id") {
+    val samples = Decom(hkPackets, Fixtures.hkParamDefs)
+      .where(col("name") === "obc_temp_dn" && col("seq_count") === 5)
+    val raw = (2048 + 200 * math.sin(5 / 20.0)).toInt.toDouble
+    // the earlier entry's unit does not leak past a later one that sets none
+    val r = Calibration(samples, Seq(
+      CalibrationEntry("obc_temp_dn", "polynomial", Some("V"), coefficients = Seq(1.0, 2.0)),
+      CalibrationEntry("obc_temp_dn", "identity"))).head()
+    assert(r.getAs[Double]("eng_value") == raw)
+    assert(r.getAs[String]("unit") == "DN")
+    assert(r.getAs[String]("calibration_id") == "identity")
+    val back = Calibration(samples, Seq(
+      CalibrationEntry("obc_temp_dn", "identity"),
+      CalibrationEntry("obc_temp_dn", "polynomial", Some("V"), coefficients = Seq(1.0, 2.0)))).head()
+    assert(back.getAs[Double]("eng_value") == 2.0 * raw + 1.0)
+    assert(back.getAs[String]("unit") == "V")
+    assert(back.getAs[String]("calibration_id") == "polynomial")
+  }
+
+  test("calibration plan size does not depend on the number of entries; 512 entries run") {
+    val samples = Decom(hkPackets, Fixtures.hkParamDefs)
+    def entries(n: Int) = (0 until n).map { i =>
+      i % 3 match {
+        case 0 => CalibrationEntry(s"p$i", "polynomial", Some("V"), coefficients = Seq(i, 0.5, 1e-3))
+        case 1 => CalibrationEntry(s"p$i", "table", Some("degC"),
+          table_raw = Seq(0.0, 1000.0, 4000.0), table_eng = Seq(-1.0, 0.0, 1.0))
+        case _ => CalibrationEntry(s"p$i", "identity")
+      }
+    } ++ Fixtures.hkCalibrations
+    def expressionNodes(n: Int): Int =
+      Calibration(samples, entries(n)).queryExecution.analyzed
+        .map(_.expressions.map(_.collect { case e => e }.size).sum).sum
+    assert(expressionNodes(16) == expressionNodes(512))
+    val r = Calibration(samples, entries(512))
+      .where(col("name") === "obc_temp_dn" && col("seq_count") === 5).head()
+    val raw = (2048 + 200 * math.sin(5 / 20.0)).toInt.toDouble
+    assert(math.abs(r.getAs[Double]("eng_value") - (-55.0 + 0.04394531 * raw)) < 1e-6)
+    assert(r.getAs[String]("calibration_id") == "polynomial")
+  }
+
+  test("a table_raw that is not non-decreasing, or holds NaN, is rejected with its parameter") {
+    val unsorted = intercept[IllegalArgumentException](CalibrationEntry("t", "table",
+      table_raw = Seq(0.0, 2.0, 1.0), table_eng = Seq(0.0, 1.0, 2.0)))
+    assert(unsorted.getMessage.contains("table_raw for t must be non-decreasing"))
+    val nan = intercept[IllegalArgumentException](CalibrationEntry("u", "table",
+      table_raw = Seq(0.0, Double.NaN), table_eng = Seq(0.0, 1.0)))
+    assert(nan.getMessage.contains("table_raw for u"))
+    // repeated x values are allowed (a step)
+    CalibrationEntry("v", "table", table_raw = Seq(0.0, 1.0, 1.0), table_eng = Seq(0.0, 1.0, 5.0))
+  }
+
   test("flagship end-to-end: parse -> decom -> calibrate -> tidy/wide") {
     val samples = Calibration(Decom(hkPackets, Fixtures.hkParamDefs), Fixtures.hkCalibrations)
     val tidy = Telemetry.tidy(samples)
