@@ -139,21 +139,11 @@ object CalibrationTable {
   }
 }
 
-/** A calibration expression reaches its table from generated code
-  * through `ctx.addReferenceObj`.
-  */
-abstract class CalibrationExpression extends Expression {
-  def table: CalibrationTable
-
-  protected def tableRef(ctx: CodegenContext): String =
-    ctx.addReferenceObj("calibration", table, classOf[CalibrationTable].getName)
-}
-
 /** The row's entry index: -1 when the name has no entry or `raw_value`
   * is null (the reference's float(raw) guard, calibration.py:94-113).
   */
 case class CalibrationIndex(name: Expression, raw: Expression, table: CalibrationTable)
-    extends CalibrationExpression {
+    extends Expression {
   override def children: Seq[Expression] = Seq(name, raw)
   override def nullable: Boolean = false
   override def dataType: DataType = IntegerType
@@ -165,7 +155,7 @@ case class CalibrationIndex(name: Expression, raw: Expression, table: Calibratio
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = tableRef(ctx)
+    val ref = ctx.addReferenceObj("calibration", table, classOf[CalibrationTable].getName)
     val n = name.genCode(ctx)
     val r = raw.genCode(ctx)
     ev.copy(isNull = FalseLiteral, code = code"""
@@ -182,7 +172,8 @@ case class CalibrationIndex(name: Expression, raw: Expression, table: Calibratio
 /** A column after calibration: the entry's value when the row's index
   * is set, else the column as it was.
   */
-abstract class CalibratedColumn extends CalibrationExpression {
+abstract class CalibratedColumn extends Expression {
+  def table: CalibrationTable
   def index: Expression
   def old: Expression
 
@@ -201,7 +192,7 @@ abstract class CalibratedColumn extends CalibrationExpression {
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = tableRef(ctx)
+    val ref = ctx.addReferenceObj("calibration", table, classOf[CalibrationTable].getName)
     val i = index.genCode(ctx)
     val o = old.genCode(ctx)
     val javaType = CodeGenerator.javaType(dataType)
