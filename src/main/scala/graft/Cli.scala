@@ -92,7 +92,7 @@ object Cli {
           case Some(l) =>
             // the loader's write is the pipeline's ONE action; the
             // negative sentinel tells Pipeline.run to take the row
-            // count from the stage_load observe that rode that action
+            // count from the last stage's observe that rode that action
             // (the old df.count() here was a second full-pipeline job)
             Registry.getLoader(l)(df, Registry.parseConfig(opts.loaderConfig.getOrElse("")))
             -1L

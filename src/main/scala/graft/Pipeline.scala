@@ -71,16 +71,12 @@ object Pipeline {
     try {
       // index the metric names: two transforms may share a name (e.g.
       // two apid_filter stages) and observe names must be plan-unique
-      var df = extract(spark).observe("stage_0_extract", count(lit(1)).as("rows"))
-      transforms.zipWithIndex.foreach { case ((name, fn), i) =>
-        df = fn(df).observe(s"stage_${i + 1}_$name", count(lit(1)).as("rows"))
+      val names = "extract" +: transforms.map(_._1)
+      val keys = names.zipWithIndex.map { case (n, i) => s"stage_${i}_$n" }
+      var df = extract(spark).observe(keys.head, count(lit(1)).as("rows"))
+      transforms.zip(keys.tail).foreach { case ((_, fn), key) =>
+        df = fn(df).observe(key, count(lit(1)).as("rows"))
       }
-      // the loader's input is observed too, so a loader whose write IS
-      // the action gets its row count from that one job: `load` may
-      // return a negative sentinel to mean "read it from the observe"
-      // instead of paying a second count() action over the whole
-      // pipeline (the Cli.run double-action, r15 verdict item 5)
-      df = df.observe("stage_load", count(lit(1)).as("rows"))
       val listener = new MetricsListener
       spark.listenerManager.register(listener)
       try {
@@ -92,13 +88,16 @@ object Pipeline {
       }
       val elapsed = (System.nanoTime() - t0) / 1e9
       val observed = listener.observed
+      // the last stage's observe counts the loader's input, so a loader
+      // whose write IS the action gets its row count from that one job:
+      // `load` may return a negative sentinel to mean "read it from the
+      // observe" instead of paying a second count() action over the
+      // whole pipeline (the Cli.run double-action, r15 verdict item 5)
       if (rows < 0L && !dryRun)
-        rows = observed.getOrElse("stage_load", -1L)
-      val names = "extract" +: transforms.map(_._1)
-      names.zipWithIndex.foreach { case (n, i) =>
+        rows = observed.getOrElse(keys.last, -1L)
+      names.zip(keys).foreach { case (n, key) =>
         stageResults += StageResult(
-          n, if (dryRun) "skipped" else "success",
-          observed.getOrElse(s"stage_${i}_$n", -1L))
+          n, if (dryRun) "skipped" else "success", observed.getOrElse(key, -1L))
       }
       hooks.fire("pipeline.complete", Map("rows" -> rows))
       PipelineResult(

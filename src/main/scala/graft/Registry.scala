@@ -920,7 +920,7 @@ object Registry {
         str(c, "output_dir").getOrElse(sys.error("jsonl loader needs 'output_dir'")))
     },
     "orc" -> { (df, c) =>
-      df.write
+      graft.sinks.Sinks.writer(df)
         .mode(if (bool(c, "overwrite").getOrElse(true)) "overwrite" else "error")
         .orc(str(c, "output_dir").getOrElse(sys.error("orc loader needs 'output_dir'")))
     })

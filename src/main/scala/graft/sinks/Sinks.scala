@@ -2,9 +2,10 @@ package graft.sinks
 
 import graft.sources.v2.SerializableHadoopConf
 import graft.telemetry.CcsdsColumns
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row}
 import org.apache.spark.sql.functions._
 
 /** File sinks (reference loaders, SURVEY.md §2.9).
@@ -21,17 +22,37 @@ import org.apache.spark.sql.functions._
   * reference's read-concat-rewrite is non-atomic; Spark's commit protocol
   * is the durable version of the same semantics).
   *
+  * Every loader's write carries [[LocalFsOptions]]. Without Hadoop's
+  * native library, its local file system forks `chmod` for every file,
+  * `.crc` sidecar and directory it creates (~250 forks per tidy write of
+  * 80 parameters); with the options, `file:` paths resolve to
+  * [[LocalFs]], which sets the same modes through `java.nio`. The keys
+  * name only the `file:` scheme, so HDFS or S3 writes are unchanged, and
+  * they ride on each write, not on the session, so any `SparkSession`
+  * gets them.
+  *
   * HDF5 is intentionally out of scope (no JVM-native Spark writer;
   * SURVEY.md §2.9) — Parquet is the durable format.
   */
 object Sinks {
+
+  /** Hadoop keys that resolve `file:` to [[LocalFs]]. The cache must be
+    * off for that scheme: `FileSystem.get` would otherwise hand back the
+    * default instance another caller already made.
+    */
+  val LocalFsOptions: Map[String, String] = Map(
+    "fs.file.impl" -> classOf[LocalFs].getName,
+    "fs.file.impl.disable.cache" -> "true")
+
+  /** `df.write` with [[LocalFsOptions]]; every loader starts its write here. */
+  def writer(df: DataFrame): DataFrameWriter[Row] = df.write.options(LocalFsOptions)
 
   /** Per-parameter tidy sink (parquet.py:50-78 per-parameter mode). */
   def writeTidyParquet(
       samples: DataFrame, dir: String,
       partitionByApid: Boolean = false, overwrite: Boolean = true): Unit = {
     val partCols = if (partitionByApid) Seq("name", "apid") else Seq("name")
-    clustered(samples, partCols).write
+    writer(clustered(samples, partCols))
       .partitionBy(partCols: _*)
       .mode(if (overwrite) "overwrite" else "append")
       .parquet(dir)
@@ -49,7 +70,7 @@ object Sinks {
 
   /** Wide sink (parquet.py wide mode → single pivoted table). */
   def writeWideParquet(wide: DataFrame, dir: String, overwrite: Boolean = true): Unit =
-    wide.write.mode(if (overwrite) "overwrite" else "append").parquet(dir)
+    writer(wide).mode(if (overwrite) "overwrite" else "append").parquet(dir)
 
   /** CCSDS packet-stream sink: serializes parsed packets (the ccsds V2
     * source schema) back to raw big-endian byte streams, one file per
@@ -67,10 +88,11 @@ object Sinks {
     // this, re-running with FEWER partitions leaves stale higher-
     // numbered part-*.bin files from the previous run in place, and the
     // extractor silently reads them back into the round-trip.
+    val hadoopConf = new Configuration(packets.sparkSession.sparkContext.hadoopConfiguration)
+    LocalFsOptions.foreach { case (k, v) => hadoopConf.set(k, v) }
     locally {
       val target = new Path(dir)
-      val fs = target.getFileSystem(
-        packets.sparkSession.sparkContext.hadoopConfiguration)
+      val fs = target.getFileSystem(hadoopConf)
       if (fs.exists(target)) fs.delete(target, true)
       fs.mkdirs(target)
     }
@@ -80,8 +102,7 @@ object Sinks {
         col("seq_count"), col("data_length")),
       coalesce(col("secondary_header"), lit(Array.emptyByteArray)),
       coalesce(col("user_data"), lit(Array.emptyByteArray))).as("pkt"))
-    val conf = new SerializableHadoopConf(
-      packets.sparkSession.sparkContext.hadoopConfiguration)
+    val conf = new SerializableHadoopConf(hadoopConf)
     bytes.foreachPartition { (it: Iterator[Row]) =>
       if (it.hasNext) {
         val path = new Path(dir, f"part-${TaskContext.getPartitionId()}%05d.bin")
@@ -96,7 +117,7 @@ object Sinks {
   /** CSV sink (csv loader, header on, per-parameter partitioning). */
   def writeTidyCsv(
       samples: DataFrame, dir: String, overwrite: Boolean = true): Unit =
-    clustered(samples, Seq("name")).write
+    writer(clustered(samples, Seq("name")))
       .option("header", "true")
       .partitionBy("name")
       .mode(if (overwrite) "overwrite" else "append")

@@ -38,8 +38,9 @@ object JsonlSource {
       .json(path)
 
   /** Write a DataFrame as JSONL (one object per line, JSON-escaped —
-    * embedded newlines in values cannot break line framing).
+    * embedded newlines in values cannot break line framing), through
+    * the sinks' fork-free local file system.
     */
   def write(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").json(path)
+    graft.sinks.Sinks.writer(df).mode("overwrite").json(path)
 }

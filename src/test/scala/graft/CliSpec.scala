@@ -186,7 +186,7 @@ class CliSpec extends SparkSpec {
     try {
       actions.set(0)
       // the Cli.run loader path: write IS the action, -1 sentinel tells
-      // Pipeline.run to take rowsLoaded from the stage_load observe
+      // Pipeline.run to take rowsLoaded from the last stage's observe
       val result = Pipeline.run(
         spark,
         extract = s => extract(s, Registry.parseConfig(

@@ -31,6 +31,45 @@ class PipelineSpec extends SparkSpec {
     assert(errors == Seq("stage"))
   }
 
+  test("rowsLoaded is the last stage's observe; the plan holds one CollectMetrics per stage") {
+    import org.apache.spark.sql.execution.{CollectMetricsExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.functions.col
+    val plans = collection.mutable.Buffer.empty[SparkPlan]
+    val tap = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        plans.synchronized { plans += qe.executedPlan; () }
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    val helper = new AdaptiveSparkPlanHelper {}
+    Seq(
+      Nil -> 10L,
+      Seq[(String, Pipeline.Stage)](
+        "evens" -> (_.where(col("id") % 2 === 0)),
+        "small" -> (_.where(col("id") < 6))) -> 3L).foreach { case (transforms, last) =>
+      org.apache.spark.GraftSparkShims.waitForListeners(spark.sparkContext)
+      plans.clear()
+      spark.listenerManager.register(tap)
+      val result = try Pipeline.run(
+        spark,
+        extract = s => s.range(10).toDF("id"),
+        transforms = transforms,
+        load = df => { df.write.format("noop").mode("overwrite").save(); -1L })
+      finally {
+        org.apache.spark.GraftSparkShims.waitForListeners(spark.sparkContext)
+        spark.listenerManager.unregister(tap)
+      }
+      assert(result.ok, result.summary)
+      assert(result.stages.last.rowsOut == last)
+      assert(result.rowsLoaded == last)
+      assert(plans.size == 1, s"expected one action, saw ${plans.size}")
+      val metrics = helper.collect(plans.head) { case c: CollectMetricsExec => c }
+      assert(metrics.size == transforms.size + 1, plans.head.treeString)
+    }
+  }
+
   test("a partitioned parquet load observes extract and load rows once each") {
     import graft.telemetry.Fixtures
     val in = java.nio.file.Files.createTempDirectory("pipe_pq_in")

@@ -59,6 +59,53 @@ class SinksSpec extends SparkSpec {
     assert(spark.read.option("header", "true").csv(csv.toString).count() == 80)
   }
 
+  test("every Registry loader and the wide sink write file: paths through LocalFs") {
+    import org.apache.hadoop.fs.{FileSystem, RawLocalFileSystem}
+    // bytes each local file system class wrote, .crc sidecars included
+    def written(cls: Class[_ <: FileSystem]) = FileSystem.getStatistics("file", cls).getBytesWritten
+    def partDirs(d: java.io.File) = d.listFiles().filter(_.isDirectory).sortBy(_.getName).toSeq
+    def dataFiles(d: java.io.File) = d.listFiles().filter(_.getName.startsWith("part-")).toSeq
+    val names = Fixtures.hkParamDefs.map("name=" + _.name).sorted
+    val spread = samples.repartition(4)
+    val packets = CcsdsSource.packetsFromBytes(
+      spark, Seq(Fixtures.hkStream(20)), CcsdsSource.Options(secHdrLength = 4))
+    val cases: Seq[(String, (String => Unit), (String => Unit))] = Seq(
+      ("parquet", dir => graft.Registry.getLoader("parquet")(spread, graft.Registry.parseConfig(
+        s"""{"output_dir": "$dir"}""")), { dir =>
+        val d = new java.io.File(dir)
+        assert(partDirs(d).map(_.getName) == names)
+        assert(partDirs(d).forall(n => dataFiles(n).size <= 2))
+        assert(spark.read.parquet(dir).count() == 80)
+      }),
+      ("csv", dir => graft.Registry.getLoader("csv")(spread, graft.Registry.parseConfig(
+        s"""{"output_dir": "$dir"}""")), { dir =>
+        val d = new java.io.File(dir)
+        assert(partDirs(d).map(_.getName) == names)
+        assert(partDirs(d).forall(n => dataFiles(n).size <= 2))
+        assert(spark.read.option("header", "true").csv(dir).count() == 80)
+      }),
+      ("jsonl", dir => graft.Registry.getLoader("jsonl")(samples, graft.Registry.parseConfig(
+        s"""{"output_dir": "$dir"}""")), dir => assert(spark.read.json(dir).count() == 80)),
+      ("orc", dir => graft.Registry.getLoader("orc")(samples, graft.Registry.parseConfig(
+        s"""{"output_dir": "$dir"}""")), dir => assert(spark.read.orc(dir).count() == 80)),
+      ("ccsds", dir => graft.Registry.getLoader("ccsds")(packets, graft.Registry.parseConfig(
+        s"""{"output_dir": "$dir"}""")), dir => assert(spark.read.format("ccsds")
+        .option("path", dir).option("sec_hdr_length", "4").load().count() == 20)),
+      ("wide", dir => Sinks.writeWideParquet(graft.operators.Telemetry.wide(samples), dir),
+        dir => assert(spark.read.parquet(dir).count() == 20)))
+    assert(cases.map(_._1).toSet - "wide" == graft.Registry.loaders.keySet)
+    cases.foreach { case (name, write, check) =>
+      val dir = java.nio.file.Files.createTempDirectory(s"sink_fs_$name").toString
+      val (nio, hadoop) = (written(classOf[LocalFs.NioRaw]), written(classOf[RawLocalFileSystem]))
+      write(dir)
+      assert(written(classOf[LocalFs.NioRaw]) > nio, s"$name wrote nothing through LocalFs")
+      assert(written(classOf[RawLocalFileSystem]) == hadoop, s"$name wrote through Hadoop's local FS")
+      check(dir)
+    }
+    val conf = spark.sessionState.newHadoopConfWithOptions(Sinks.LocalFsOptions)
+    assert(FileSystem.get(java.net.URI.create("file:///"), conf).getClass == classOf[LocalFs])
+  }
+
   test("apid-partitioned layout adds apid subdirectories") {
     val dir = java.nio.file.Files.createTempDirectory("sink_apid").toString
     Sinks.writeTidyParquet(samples, dir, partitionByApid = true)
