@@ -1,19 +1,23 @@
 #!/usr/bin/env bash
-# End-of-session invariant: the committed tree must compile, every
-# registry query must hash-match its DuckDB oracle, and the bench must
-# produce a metric line. Run this before the final commit of a session;
-# it exits non-zero (and says why) on any failure.
+# Pre-commit invariant: the tree must compile, pass its tests, and
+# hash-match every registry query against its DuckDB oracle, and the
+# bench must produce a metric line. Run this before committing; it
+# exits non-zero (and says why) on any failure.
 #
 #   scripts/preflight.sh [sf_dir_verify] [sf_dir_bench]
 #
-# Defaults mirror the driver's gates: verify at sf0.01, bench at sf0.1.
-# Pass sf0.001 for both while iterating.
+# Defaults are the oracle gate's sf0.01 and the bench's sf0.1. Pass
+# sf0.001 for both while iterating. The verify results, with the sf0.1
+# and sf10 checks, land in CORRECTNESS_LOCAL.json.
 set -uo pipefail
 cd "$(dirname "$0")/.."
 
 VERIFY_SF="${1:-/root/testdata/sf0.01}"
 BENCH_SF="${2:-/root/testdata/sf0.1}"
 OUT="$(mktemp -d /tmp/preflight.XXXXXX)"
+ART="CORRECTNESS_LOCAL.json"
+# two heavy-family queries (similarity/ANN) checked at 100x the sf0.1 data
+SF10_QUERIES="s19_hybrid_rerank s3_ann_ivf"
 
 fail() { echo "PREFLIGHT FAIL: $*" >&2; exit 1; }
 
@@ -28,118 +32,60 @@ sbt -batch test >"$OUT/test.log" 2>&1 \
 echo "== preflight: verify @ $VERIFY_SF =="
 sbt -batch "runMain graft.Verify $VERIFY_SF $OUT/verify" >"$OUT/verify.log" 2>&1 \
   || fail "graft.Verify crashed (see $OUT/verify.log)"
-# Current round = last round seen in PROGRESS.jsonl (the driver appends
-# one line per poll); the local artifact makes this round's correctness
-# signal survive a driver-side artifact hiccup.
-ROUND="$(python3 -c 'import json;print(json.loads(open("PROGRESS.jsonl").readlines()[-1])["round"])' 2>/dev/null || echo 0)"
-LOCAL_ART="CORRECTNESS_LOCAL_r${ROUND}.json"
-python3 scripts/check_correctness.py "$VERIFY_SF" "$OUT/verify" "$LOCAL_ART" \
+python3 scripts/check_correctness.py "$VERIFY_SF" "$OUT/verify" "$ART" \
   || fail "oracle mismatch (scroll up for the per-query FAIL rows)"
-# the local artifact must cover every SparkEntry query (a short run
-# would mask missing entries exactly like the r15 empty artifact did)
-python3 - "$LOCAL_ART" "$OUT/verify" <<'EOF' || exit 1
+# the artifact must cover every query Verify dumped: a short run would
+# hide missing entries behind an all-pass count
+python3 - "$ART" "$OUT/verify" <<'EOF' || exit 1
 import json, os, sys
 art = json.load(open(sys.argv[1]))
 n_results = sum(os.path.isdir(os.path.join(sys.argv[2], d))
                 for d in os.listdir(sys.argv[2]))
 n = len(art.get("queries", {}))
 if n < n_results or n == 0:
-    print(f"PREFLIGHT FAIL: local correctness artifact has {n} entries "
+    print(f"PREFLIGHT FAIL: correctness artifact has {n} entries "
           f"for {n_results} verify outputs", file=sys.stderr)
     sys.exit(1)
-print(f"local artifact: {n} entries, {art['n_pass']} pass")
+print(f"{sys.argv[1]}: {n} entries, {art['n_pass']} pass")
 EOF
 
-echo "== preflight: rotating sf0.1 verify subset =="
-# The r18 CTE-materialization and cell-coupling bugs were both
-# INVISIBLE at the sf0.01 gate — the gate SF was the blind spot for
-# three rounds. Every preflight therefore re-verifies a deterministic
-# ROTATING subset of queries at sf0.1 (10x the gate SF): 15 queries
-# picked by md5(round:name), so every query gets a 10x-SF check every
-# ~10 rounds at ~1 min cost. The subset list lands in the local
-# artifact's `sf01_subset` field.
-# Every THIRD round the subset expands to the FULL registry (the
-# r20-item-5 sweep that caught x34, run by hand in r20 and r21 — now on
-# a standing schedule): ~4 min extra, and the local artifact records
-# `sf01_full: true` when it fires so the judge can see which rounds
-# carried the full 10x-SF oracle pass.
-SUBSET="$(python3 - "$ROUND" <<'EOF'
-import hashlib, json, re, sys
-round_n = sys.argv[1]
-names = sorted(json.load(open(
-    max(__import__('glob').glob('CORRECTNESS_r*.json'),
-        key=lambda p: int(re.search(r'r(\d+)', p).group(1))))).keys())
-ranked = sorted(names, key=lambda n: hashlib.md5(f"{round_n}:{n}".encode()).hexdigest())
-if not ranked:
-    # fail HERE with the real cause: deriving an empty subset from an
-    # empty {} driver artifact (the r15/r16 failure mode) would invoke
-    # graft.Verify with no query args and misattribute the eventual
-    # 'subset not green' failure (r19 advice)
-    print("source CORRECTNESS artifact has no query names - the sf0.1 "
-          "subset cannot be derived from an empty {}", file=sys.stderr)
-    sys.exit(1)
-if int(round_n) % 3 == 0:
-    print(" ".join(names))  # full-registry sweep round
-else:
-    print(" ".join(ranked[:15]))
-EOF
-)" || fail "sf0.1 subset derivation failed (see message above)"
-echo "sf0.1 subset (round $ROUND): $SUBSET"
-sbt -batch "runMain graft.Verify /root/testdata/sf0.1 $OUT/verify_sf01 $SUBSET" \
+echo "== preflight: full-registry verify @ sf0.1 =="
+# Defects that only show at larger data (a materialized CTE, coupled
+# cells) have passed the sf0.01 gate before, so the whole registry is
+# re-verified at sf0.1, 10x the gate's data.
+sbt -batch "runMain graft.Verify /root/testdata/sf0.1 $OUT/verify_sf01" \
   >"$OUT/verify_sf01.log" 2>&1 \
   || fail "graft.Verify @ sf0.1 crashed (see $OUT/verify_sf01.log)"
 python3 scripts/check_correctness.py /root/testdata/sf0.1 "$OUT/verify_sf01" \
-  "$OUT/sf01_subset.json" \
-  || fail "sf0.1 subset oracle mismatch (scroll up for FAIL rows)"
-python3 - "$LOCAL_ART" "$OUT/sf01_subset.json" <<'EOF' || exit 1
+  "$OUT/sf01.json" \
+  || fail "sf0.1 oracle mismatch (scroll up for FAIL rows)"
+python3 - "$ART" "$OUT/sf01.json" <<'EOF' || exit 1
 import json, sys
 art = json.load(open(sys.argv[1]))
-sub = json.load(open(sys.argv[2]))
-if sub.get("n_fail", 1) != 0 or sub.get("n_pass", 0) == 0:
-    print("PREFLIGHT FAIL: sf0.1 subset not green", file=sys.stderr)
+sf01 = json.load(open(sys.argv[2]))
+if sf01.get("n_fail", 1) != 0 or sf01.get("n_pass", 0) == 0:
+    print("PREFLIGHT FAIL: sf0.1 verify not green", file=sys.stderr)
     sys.exit(1)
-art["sf01_subset"] = {"queries": sorted(sub.get("queries", {})),
-                      "n_pass": sub["n_pass"]}
-# full-sweep rounds: the subset covered the whole registry
-if len(sub.get("queries", {})) >= len(art.get("queries", {})) > 0:
-    art["sf01_full"] = True
+art["sf01"] = {"queries": sorted(sf01.get("queries", {})),
+               "n_pass": sf01["n_pass"]}
 json.dump(art, open(sys.argv[1], "w"), indent=1)
-print(f"sf0.1 subset: {sub['n_pass']} pass, recorded in {sys.argv[1]}")
+print(f"sf0.1: {sf01['n_pass']} pass, recorded in {sys.argv[1]}")
 EOF
 
-echo "== preflight: rotating sf10 heavy-family spot check =="
-# r19's BY-HAND sf10 exercise caught a real scale defect (the broadcast
-# guard's no-CBO estimate falsely rejecting 20-row query sets) that was
-# invisible at every gate SF — so the exercise is now a standing step.
-# Two HEAVY-family queries (similarity/dedup/stream/cluster/pipeline)
-# rotate by md5(round:name) and run at 100x the gate SF against the
-# make_sf.py fixture (rows-only: the fixture is bench-grade, the DuckDB
-# oracle stays at the driver SFs). Failures here are scale defects:
-# guard false-positives, driver-side collects, plan-size blowups.
+echo "== preflight: sf10 heavy-family check =="
+# Scale defects (a broadcast guard rejecting a small side on a bad
+# estimate, a driver-side collect, a plan-size blowup) pass every oracle
+# SF. The sf10 fixture is bench-grade (make_sf.py), so this check is
+# rows-only: each query must produce readable, non-empty output.
 if [ ! -d /tmp/sf10 ]; then
   echo "building /tmp/sf10 (make_sf.py 100x, one-time per machine)"
   python3 scripts/make_sf.py /root/testdata/sf0.1 /tmp/sf10 100 \
     >"$OUT/make_sf10.log" 2>&1 || fail "make_sf.py sf10 build failed"
 fi
-SF10_SUBSET="$(python3 - "$ROUND" <<'EOF'
-import hashlib, json, re, sys
-names = sorted(json.load(open(
-    max(__import__('glob').glob('CORRECTNESS_r*.json'),
-        key=lambda p: int(re.search(r'r(\d+)', p).group(1))))).keys())
-heavy = [n for n in names if re.match(r'(s|st|d|c|e|p)\d', n)]
-ranked = sorted(heavy,
-    key=lambda n: hashlib.md5(f"sf10:{sys.argv[1]}:{n}".encode()).hexdigest())
-if not ranked:
-    print("no heavy-family query names in the source artifact", file=sys.stderr)
-    sys.exit(1)
-print(" ".join(ranked[:2]))
-EOF
-)" || fail "sf10 subset derivation failed (see message above)"
-echo "sf10 subset (round $ROUND): $SF10_SUBSET"
-sbt -batch "runMain graft.Verify /tmp/sf10 $OUT/verify_sf10 $SF10_SUBSET" \
+sbt -batch "runMain graft.Verify /tmp/sf10 $OUT/verify_sf10 $SF10_QUERIES" \
   >"$OUT/verify_sf10.log" 2>&1 \
   || fail "graft.Verify @ sf10 crashed (see $OUT/verify_sf10.log)"
-python3 - "$LOCAL_ART" "$OUT/verify_sf10" $SF10_SUBSET <<'EOF' || exit 1
+python3 - "$ART" "$OUT/verify_sf10" $SF10_QUERIES <<'EOF' || exit 1
 import json, sys
 import duckdb
 art_path, outdir, names = sys.argv[1], sys.argv[2], sys.argv[3:]
@@ -158,48 +104,9 @@ if empty:
           file=sys.stderr)
     sys.exit(1)
 art = json.load(open(art_path))
-art["sf10_subset"] = {"queries": rows, "check": "rows_only"}
+art["sf10"] = {"queries": rows, "check": "rows_only"}
 json.dump(art, open(art_path, "w"), indent=1)
-print(f"sf10 subset: {rows} rows, recorded in {art_path}")
-EOF
-
-echo "== preflight: correctness-artifact guard =="
-# r15/r16 closed with EMPTY driver CORRECTNESS files ({}) — the gate
-# silently lost its signal. Refuse to call a session done while the
-# newest driver artifact parses to zero/short entries UNLESS a
-# populated, passing local rerun with round >= that artifact's round
-# covers it. This guard runs AFTER the verify step above (which writes
-# CORRECTNESS_LOCAL_r{ROUND}.json), so a fresh preflight run always
-# satisfies its own remediation — no self-deadlock (r16 ADVICE).
-# Rounds <= 15 are grandfathered (judge reran the gate by hand).
-python3 - <<'EOF' || exit 1
-import glob, json, re, sys
-def rnd(p): return int(re.search(r"r(\d+)", p).group(1))
-arts = sorted(glob.glob("CORRECTNESS_r*.json"), key=rnd)
-if not arts:
-    sys.exit(0)
-latest = arts[-1]
-k = rnd(latest)
-n = len(json.load(open(latest)) or {})
-if n > 0:
-    print(f"driver artifact {latest}: {n} entries — ok")
-    sys.exit(0)
-for local in sorted(glob.glob("CORRECTNESS_LOCAL_r*.json"), key=rnd):
-    if rnd(local) < k:
-        continue
-    loc = json.load(open(local))
-    if loc.get("n_fail", 1) == 0 and loc.get("n_pass", 0) > 0:
-        print(f"driver artifact {latest} is EMPTY, but {local} covers it "
-              f"({loc['n_pass']} pass) — ok")
-        sys.exit(0)
-if k <= 15:
-    print(f"driver artifact {latest} is EMPTY (adjudicated in "
-          f"VERDICT.md r15; grandfathered)")
-    sys.exit(0)
-print(f"PREFLIGHT FAIL: {latest} parses to zero entries and no passing "
-      f"CORRECTNESS_LOCAL_r>={k}.json exists — the verify step above "
-      f"should have written one; check its output", file=sys.stderr)
-sys.exit(1)
+print(f"sf10: {rows} rows, recorded in {art_path}")
 EOF
 
 echo "== preflight: bench @ $BENCH_SF =="
@@ -248,12 +155,12 @@ if new:
 EOF
 
 echo "== preflight: clean tree check =="
-# BENCH_LAST.json is rewritten by the bench run itself, and the local
-# correctness artifact is written by the verify step above - commit
-# them with the preflight result, but don't let them fail the check
-if [ -n "$(git status --porcelain | grep -v ' BENCH_LAST.json$' | grep -v ' CORRECTNESS_LOCAL_r[0-9]*.json$')" ]; then
+# BENCH_LAST.json is rewritten by the bench run and CORRECTNESS_LOCAL.json
+# by the verify steps above: commit them with the preflight result, but
+# don't let them fail the check
+if [ -n "$(git status --porcelain | grep -v ' BENCH_LAST.json$' | grep -v " $ART\$")" ]; then
   git status --short
-  fail "working tree is dirty - commit (or clean) before calling a session done"
+  fail "working tree is dirty - commit (or clean) before calling the tree done"
 fi
 
 echo "PREFLIGHT OK (logs in $OUT)"

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Clustering, Dedup, Graph, RangeJoin, TextAnalysis}
+import graft.sinks.Sinks
 
 /** Round-2 engine surface: range joins, subqueries, grouping sets,
   * string aggregation, JSON extraction, TF-IDF, stratified sampling,
@@ -330,9 +331,8 @@ object QueriesExtended {
       // pairs: the cluster table is tiny at gate SFs and its consumers
       // (d8/d10/d16/c8/p4/p5) are scan-light joins — 32 near-empty
       // files taxed every one of them with per-file open tasks
-      Dedup.jaccardClustersFromPairs(pairs)
-        .hint("rebalance")
-        .write.mode("overwrite").parquet(s"$d/clusters")
+      Sinks.writer(Dedup.jaccardClustersFromPairs(pairs).hint("rebalance"))
+        .mode("overwrite").parquet(s"$d/clusters")
     }
     s.read.parquet(s"$staged/clusters")
   }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Calibration, Decom, Telemetry}
+import graft.sinks.Sinks
 import graft.sources.CsvTelemetrySource
 import graft.telemetry._
 import graft.telemetry.CcsdsColumns._
@@ -47,9 +48,9 @@ object QueriesTelemetry {
       // here the whole decom explode) ran at file-split parallelism
       // (~10 tasks at sf0.1); 32 staged files make the decode stage
       // width = cluster width
-      synthPacketsPlan(s, dir)
-        .repartition(s.sparkContext.defaultParallelism)
-        .write.mode("overwrite").parquet(s"$d/packets")
+      Sinks.writer(synthPacketsPlan(s, dir)
+          .repartition(s.sparkContext.defaultParallelism))
+        .mode("overwrite").parquet(s"$d/packets")
     }
     s.read.parquet(s"$staged/packets")
   }

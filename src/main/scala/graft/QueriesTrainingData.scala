@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
+import graft.sinks.Sinks
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -34,10 +35,10 @@ object QueriesTrainingData {
     */
   private[graft] def stagedShingles(s: SparkSession, dir: String): DataFrame = {
     val staged = TempDirs.cached(s"shingles3:$dir") { d =>
-      Dedup.hashedGramTable(docs(s, dir), 3, carryCols = Seq("source"))
-        .select(col("doc_id"), col("source"), col("h"), col("hb"))
-        .repartition(s.sparkContext.defaultParallelism)
-        .write.mode("overwrite").parquet(s"$d/shingles")
+      Sinks.writer(Dedup.hashedGramTable(docs(s, dir), 3, carryCols = Seq("source"))
+          .select(col("doc_id"), col("source"), col("h"), col("hb"))
+          .repartition(s.sparkContext.defaultParallelism))
+        .mode("overwrite").parquet(s"$d/shingles")
     }
     s.read.parquet(s"$staged/shingles")
   }
@@ -328,9 +329,8 @@ object QueriesTrainingData {
       // consumer scan), ~64 MB files at corpus scale. Consumers are
       // scan-light (filter/join/agg), so they don't need file-count
       // parallelism the way the decode-heavy synthPackets staging does.
-      Dedup.lshVerifiedPairsFromHashes(shingles)
-        .hint("rebalance")
-        .write.mode("overwrite").parquet(s"$d/pairs")
+      Sinks.writer(Dedup.lshVerifiedPairsFromHashes(shingles).hint("rebalance"))
+        .mode("overwrite").parquet(s"$d/pairs")
     }
     s.read.parquet(s"$staged/pairs")
   }
@@ -829,9 +829,8 @@ object QueriesTrainingData {
       java.security.MessageDigest.getInstance("MD5")
         .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(10)
     TempDirs.cached(s"$key:$dir") { d =>
-      build
-        .repartition(nBuckets, col(bucketCol))
-        .write.mode("overwrite")
+      Sinks.writer(build.repartition(nBuckets, col(bucketCol)))
+        .mode("overwrite")
         .bucketBy(nBuckets, bucketCol).sortBy(bucketCol)
         .option("path", s"$d/tbl")
         .saveAsTable(tbl)
@@ -963,8 +962,8 @@ object QueriesTrainingData {
     */
   private[graft] def stagedVecStreamNew(s: SparkSession, dir: String): String =
     TempDirs.cached(s"vecs_new:$dir") { d =>
-      embs(s, dir).where(col("vec_id") % 10 === 3)
-        .repartition(2).write.mode("overwrite").parquet(d)
+      Sinks.writer(embs(s, dir).where(col("vec_id") % 10 === 3).repartition(2))
+        .mode("overwrite").parquet(d)
     }
 
   /** STREAMING semantic decontamination (s21's continuous form — the
@@ -1100,9 +1099,8 @@ object QueriesTrainingData {
     */
   private[graft] def stagedLineDf(s: SparkSession, dir: String): DataFrame = {
     val staged = TempDirs.cached(s"lineDf:$dir") { d =>
-      lineDf(s, dir)
-        .repartition(s.sparkContext.defaultParallelism)
-        .write.mode("overwrite").parquet(s"$d/lines")
+      Sinks.writer(lineDf(s, dir).repartition(s.sparkContext.defaultParallelism))
+        .mode("overwrite").parquet(s"$d/lines")
     }
     s.read.parquet(s"$staged/lines")
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorExpressions
+import graft.sinks.Sinks
 
 /** K-means-style clustering and IVF approximate nearest neighbor over
   * embedding columns.
@@ -108,11 +109,17 @@ object Clustering {
   def writeIvfIndex(
       corpus: DataFrame, centroids: Seq[(Int, Array[Double])], dir: String,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
-    corpus.select(
-        col(idCol).as("neighbor_id"),
-        nearestCentroid(col(vecCol), centroids).as("cell"),
-        Similarity.normalized(col(vecCol)).as("c_vec"))
-      .write.partitionBy("cell").mode("overwrite").parquet(dir)
+    Sinks.writer(ivfRows(corpus, centroids, idCol, vecCol))
+      .partitionBy("cell").mode("overwrite").parquet(dir)
+
+  /** An IVF index's rows: id, nearest coarse cell, normalized vector. */
+  private def ivfRows(
+      df: DataFrame, centroids: Seq[(Int, Array[Double])],
+      idCol: String, vecCol: String): DataFrame =
+    df.select(
+      col(idCol).as("neighbor_id"),
+      nearestCentroid(col(vecCol), centroids).as("cell"),
+      Similarity.normalized(col(vecCol)).as("c_vec"))
 
   /** Append a batch to a PERSISTED IVF index without rebuilding it:
     * the batch is assigned against the index's FROZEN coarse
@@ -134,11 +141,8 @@ object Clustering {
   def appendToIvfIndex(
       batch: DataFrame, centroids: Seq[(Int, Array[Double])], dir: String,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
-    batch.select(
-        col(idCol).as("neighbor_id"),
-        nearestCentroid(col(vecCol), centroids).as("cell"),
-        Similarity.normalized(col(vecCol)).as("c_vec"))
-      .write.partitionBy("cell").mode("append").parquet(dir)
+    Sinks.writer(ivfRows(batch, centroids, idCol, vecCol))
+      .partitionBy("cell").mode("append").parquet(dir)
 
   /** Compact a persisted IVF index in place, optionally applying row
     * DELETES — the other half of the [[appendToIvfIndex]] freshness
@@ -172,8 +176,8 @@ object Clustering {
       case None => rows
     }
     val tmp = dir + ".compact"
-    kept.repartition(col("cell"))
-      .write.option("maxRecordsPerFile", maxRecordsPerFile)
+    Sinks.writer(kept.repartition(col("cell")))
+      .option("maxRecordsPerFile", maxRecordsPerFile)
       .partitionBy("cell").mode("overwrite").parquet(tmp)
     val conf = spark.sparkContext.hadoopConfiguration
     val p = new org.apache.hadoop.fs.Path(dir)
@@ -362,7 +366,7 @@ object Clustering {
       corpus: DataFrame, centroids: Seq[(Int, Array[Double])], dir: String,
       idCol: String = "vec_id", vecCol: String = "embedding",
       labelCol: String = "label"): Unit =
-    corpus.select(
+    Sinks.writer(corpus.select(
         col(idCol).as("neighbor_id"),
         nearestCentroid(col(vecCol), centroids).as("cell"),
         pmod(col(labelCol), lit(LabelBuckets)).as("label_bucket"),
@@ -373,8 +377,8 @@ object Clustering {
       // files; cap file size via maxRecordsPerFile at corpus scale),
       // label-sorted within files so row-group stats are tight
       .repartition(col("cell"), col("label_bucket"))
-      .sortWithinPartitions("cell", "label_bucket", "label")
-      .write.partitionBy("cell", "label_bucket").mode("overwrite").parquet(dir)
+      .sortWithinPartitions("cell", "label_bucket", "label"))
+      .partitionBy("cell", "label_bucket").mode("overwrite").parquet(dir)
 
   /** Query a PERSISTED [[writeLabeledIvfIndex]] index under a
     * same-label constraint: each query probes its nprobe nearest
@@ -445,12 +449,12 @@ object Clustering {
       codebooks: Seq[Seq[(Int, Array[Double])]], dir: String,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
     val en = Similarity.normalized(col(vecCol))
-    corpus.select(
+    Sinks.writer(corpus.select(
         col(idCol).as("neighbor_id"),
         nearestCentroid(col(vecCol), centroids).as("cell"),
         Similarity.pqCodes(en, codebooks).as("codes"),
-        en.as("c_vec"))
-      .write.partitionBy("cell").mode("overwrite").parquet(dir)
+        en.as("c_vec")))
+      .partitionBy("cell").mode("overwrite").parquet(dir)
   }
 
   /** Query a PERSISTED IVF-PQ index: probe the nprobe nearest cells
@@ -861,7 +865,7 @@ object Clustering {
       .agg(sort_array(collect_list(col("nbr_id"))).as("nbrs"))
       .join(av, "vec_id")
       .select(col("cell"), col("vec_id"), col("en"), col("nbrs"))
-    nbrs.write.partitionBy("cell").mode("overwrite").parquet(dir)
+    Sinks.writer(nbrs).partitionBy("cell").mode("overwrite").parquet(dir)
   }
 
   /** Bounded beam search over a [[writeGraphIndex]] graph — every step

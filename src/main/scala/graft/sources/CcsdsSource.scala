@@ -31,12 +31,20 @@ object CcsdsSource {
   private val MarkerWord = 0x1acffc1d
   val HeaderSize = 6
 
+  /** `resyncWindow`: the longest garbage run allowed between a framed
+    * packet and the next marker when a mid-stream split validates its
+    * first candidate (see [[Walker]]).
+    */
   case class Options(
       secHdrLength: Int = 0,
       frameSync: Boolean = false,
       apidFilter: Option[Seq[Int]] = None,
       sourceId: Option[String] = None,
-      groundReceiptTime: Option[Double] = None)
+      groundReceiptTime: Option[Double] = None,
+      resyncWindow: Int = 0) {
+    require(secHdrLength >= 0, s"ccsds source: sec_hdr_length must be >= 0, got $secHdrLength")
+    require(resyncWindow >= 0, s"ccsds source: resync_window must be >= 0, got $resyncWindow")
+  }
 
   /** Walks the packets whose sync marker (or, unframed, whose first byte)
     * lies in [start, end) and that pass the APID filter. Reads ahead past
@@ -49,8 +57,7 @@ object CcsdsSource {
     * reuse one underlying stream; `close` closes the last one returned.
     */
   final class Walker(
-      open: Long => InputStream, start: Long, end: Long,
-      opts: Options, resyncWindow: Int = 0)
+      open: Long => InputStream, start: Long, end: Long, opts: Options)
       extends Closeable {
 
     private var in = open(start)
@@ -107,15 +114,15 @@ object CcsdsSource {
     private def followedByMarkerOrEof(): Boolean = {
       var win = 0
       var scanned = 0
-      while (scanned < resyncWindow + 4) {
+      while (scanned < opts.resyncWindow + 4) {
         val b = in.read()
         // EOF validates only if it falls within the window itself: a fake
         // packet ending a few bytes shy of EOF must NOT pass — unless those
         // bytes are the head of a last marker that the file cuts short
-        if (b < 0) return scanned - cutMarkerLength(win, scanned) <= resyncWindow
+        if (b < 0) return scanned - cutMarkerLength(win, scanned) <= opts.resyncWindow
         scanned += 1
         win = (win << 8) | b
-        if (scanned >= 4 && win == MarkerWord) return scanned - 4 <= resyncWindow
+        if (scanned >= 4 && win == MarkerWord) return scanned - 4 <= opts.resyncWindow
       }
       false
     }

@@ -115,13 +115,16 @@ class CcsdsScan(options: CaseInsensitiveStringMap, apids: Option[Seq[Int]])
     frameSync = Option(options.get("frame_sync")).exists(_.toBoolean),
     apidFilter = apids,
     sourceId = Option(options.get("source_id")),
-    groundReceiptTime = Option(options.get("ground_receipt_time")).map(_.toDouble))
+    groundReceiptTime = Option(options.get("ground_receipt_time")).map(_.toDouble),
+    resyncWindow = Option(options.get("resync_window")).map(_.toInt).getOrElse(0))
 
   override def planInputPartitions(): Array[InputPartition] = {
     val path = options.get("path")
     require(path != null, "ccsds source requires a 'path' option")
     val splitSize = Option(options.get("split_size")).map(_.toLong)
       .getOrElse(128L << 20)
+    require(splitSize > 0, s"ccsds source: split_size must be > 0, got $splitSize")
+    val o = opts // checks sec_hdr_length and resync_window
     val conf = org.apache.spark.sql.SparkSession.active
       .sparkContext.hadoopConfiguration
     val p = new Path(path)
@@ -144,7 +147,6 @@ class CcsdsScan(options: CaseInsensitiveStringMap, apids: Option[Seq[Int]])
       if (s.isDirectory) fs.listStatus(s.getPath).filter(isDataFile)
       else Array(s).filter(isDataFile)
     }
-    val o = opts
     files.flatMap { f =>
       val len = f.getLen
       if (!o.frameSync || len <= splitSize) {
@@ -164,8 +166,7 @@ class CcsdsScan(options: CaseInsensitiveStringMap, apids: Option[Seq[Int]])
   override def createReaderFactory(): PartitionReaderFactory = {
     val conf = new SerializableHadoopConf(
       org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration)
-    val resyncWindow = Option(options.get("resync_window")).map(_.toInt).getOrElse(0)
-    new CcsdsReaderFactory(opts, conf, resyncWindow)
+    new CcsdsReaderFactory(opts, conf)
   }
 }
 
@@ -189,12 +190,11 @@ class SerializableHadoopConf(@transient var value: org.apache.hadoop.conf.Config
 case class CcsdsInputPartition(file: String, start: Long, end: Long)
     extends InputPartition
 
-class CcsdsReaderFactory(
-    opts: CcsdsSource.Options, conf: SerializableHadoopConf, resyncWindow: Int)
+class CcsdsReaderFactory(opts: CcsdsSource.Options, conf: SerializableHadoopConf)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new CcsdsPartitionReader(
-      partition.asInstanceOf[CcsdsInputPartition], opts, conf.value, resyncWindow)
+      partition.asInstanceOf[CcsdsInputPartition], opts, conf.value)
 }
 
 /** Walks one split with the shared [[CcsdsSource.Walker]] over a seekable
@@ -202,8 +202,7 @@ class CcsdsReaderFactory(
   */
 class CcsdsPartitionReader(
     part: CcsdsInputPartition, opts: CcsdsSource.Options,
-    hadoopConf: org.apache.hadoop.conf.Configuration,
-    resyncWindow: Int = 0)
+    hadoopConf: org.apache.hadoop.conf.Configuration)
     extends PartitionReader[InternalRow] {
 
   private val packets = {
@@ -212,7 +211,7 @@ class CcsdsPartitionReader(
     // a reposition re-seeks the one Hadoop stream behind a fresh buffer
     new CcsdsSource.Walker(
       offset => { raw.seek(offset); new java.io.BufferedInputStream(raw, 1 << 16) },
-      part.start, part.end, opts, resyncWindow)
+      part.start, part.end, opts)
   }
   private val groundReceiptTime = opts.groundReceiptTime.map(java.lang.Double.valueOf).orNull
   private val sourceId = opts.sourceId.map(UTF8String.fromString).orNull

@@ -55,15 +55,12 @@ class ScaffoldSharingSpec extends AnyFunSuite {
   private lazy val benchSrc = read(srcRoot.resolve("Bench.scala"))
 
   /** Consumer files: everything under src/main/scala/graft except the
-    * two bench harnesses (their references are not registry consumers).
+    * bench harness (its references are not registry consumers).
     */
   private lazy val consumerSources: Seq[(String, String)] =
     Files.walk(srcRoot).iterator().asScala
       .filter(p => p.toString.endsWith(".scala"))
-      .filter { p =>
-        val n = p.getFileName.toString
-        n != "Bench.scala" && n != "SkewBench.scala"
-      }
+      .filter(_.getFileName.toString != "Bench.scala")
       .map(p => p.getFileName.toString -> read(p))
       .toSeq
 

@@ -122,6 +122,35 @@ class CcsdsDataSourceSpec extends SparkSpec {
     assert(err.getMessage.contains("does not exist"))
   }
 
+  /** The planning error a framed read with `option` = `value` raises:
+    * an `IllegalArgumentException` on the driver, not a task failure.
+    */
+  private def rejected(option: String, value: String): String = {
+    val f = markerFramedFile(50)
+    intercept[IllegalArgumentException] {
+      spark.read.format("ccsds")
+        .option("path", f.toString).option("frame_sync", "true")
+        .option(option, value).load().count()
+    }.getMessage
+  }
+
+  test("split_size <= 0 is rejected at planning, naming the option") {
+    // before: -1 planned no partition (0 rows, no error) and 0 planned
+    // Int.MaxValue partitions
+    for (v <- Seq("-1", "0"))
+      assert(rejected("split_size", v).contains(s"split_size must be > 0, got $v"))
+  }
+
+  test("a negative resync_window is rejected at planning, naming the option") {
+    // before: every mid-file split rejected its first real packet
+    assert(rejected("resync_window", "-1").contains("resync_window must be >= 0, got -1"))
+  }
+
+  test("a negative sec_hdr_length is rejected at planning, naming the option") {
+    // before: a bare copyOfRange error inside the tasks
+    assert(rejected("sec_hdr_length", "-4").contains("sec_hdr_length must be >= 0, got -4"))
+  }
+
   test("unframed file reads as a single partition") {
     val dir = java.nio.file.Files.createTempDirectory("v2plain")
     val f = dir.resolve("plain.bin")

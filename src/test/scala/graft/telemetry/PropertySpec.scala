@@ -356,6 +356,7 @@ object PropertySpec extends Properties("telemetry-kernels") {
       .option("path", path)
       .option("frame_sync", opts.frameSync.toString)
       .option("sec_hdr_length", opts.secHdrLength.toString)
+      .option("resync_window", opts.resyncWindow.toString)
       .option("split_size", splitSize.toString)
     opts.sourceId.foreach(v => reader = reader.option("source_id", v))
     opts.groundReceiptTime.foreach(v => reader = reader.option("ground_receipt_time", v.toString))
@@ -372,32 +373,40 @@ object PropertySpec extends Properties("telemetry-kernels") {
       (got == expected) :| s"${bytes.length} bytes, $opts: ${got.size} rows vs ${expected.size}"
     }
 
-  /** Gap-free framed stream (a marker before every packet, nothing
-    * between packets) after a garbage run, ending in a truncated copy of
-    * one more marker + packet. No payload, header or garbage run carries
-    * the sync pattern: a mid-split false sync whose parsed end lands on a
-    * real marker is accepted by design, and the deterministic "spurious
-    * sync pattern" test in CcsdsDataSourceSpec covers that case.
+  /** Framed stream (a marker before every packet, and after each packet
+    * a garbage run of at most `window` bytes) after a leading garbage
+    * run, ending in a truncated copy of one more marker + packet. No
+    * payload, header or garbage run carries the sync pattern, nor does a
+    * packet's tail joined to the garbage after it: a mid-split false sync
+    * whose parsed end lands on a real marker is accepted by design, and
+    * the deterministic "spurious sync pattern" test in CcsdsDataSourceSpec
+    * covers that case.
     */
-  private val framedStreamGen: Gen[(Array[Byte], Seq[GenPacket])] = {
-    val clean = packetGen(syncInPayload = false).suchThat(p => !containsSync(p.bytes))
+  private def framedStreamGen(window: Int): Gen[(Array[Byte], Seq[GenPacket])] = {
+    val clean = for {
+      p <- packetGen(syncInPayload = false)
+      gap <- Gen.choose(0, window).flatMap(Gen.listOfN(_, byteGen)).map(_.toArray)
+    } yield (p, gap)
+    val cleanPacket = clean.suchThat { case (p, gap) => !containsSync(p.bytes ++ gap) }
     for {
       lead <- Gen.listOf(byteGen).map(_.take(300).toArray).suchThat(!containsSync(_))
       n <- Gen.choose(10, 120)
-      pkts <- Gen.listOfN(n, clean)
-      last <- clean
+      pkts <- Gen.listOfN(n, cleanPacket)
+      last <- cleanPacket.map(_._1)
       keep <- Gen.choose(0, last.bytes.length + 3)
-    } yield (lead ++ pkts.flatMap(p => CcsdsSource.SyncMarker ++ p.bytes) ++
-      (CcsdsSource.SyncMarker ++ last.bytes).take(keep), pkts)
+    } yield (lead ++ pkts.flatMap { case (p, gap) => CcsdsSource.SyncMarker ++ p.bytes ++ gap } ++
+      (CcsdsSource.SyncMarker ++ last.bytes).take(keep), pkts.map(_._1))
   }
 
   property("format(ccsds) at every split_size reproduces a framed stream's packets") = {
     val gen = for {
-      stream <- framedStreamGen
+      window <- Gen.frequency(1 -> Gen.const(0), 2 -> Gen.choose(1, 48))
+      stream <- framedStreamGen(window)
       filter <- Gen.option(Gen.atLeastOne(apids).map(_.toSeq))
-    } yield (stream, filter)
-    Prop.forAllNoShrink(gen) { case ((bytes, pkts), filter) =>
-      val opts = Options(secHdrLength = 4, frameSync = true, apidFilter = filter)
+    } yield (stream, filter, window)
+    Prop.forAllNoShrink(gen) { case ((bytes, pkts), filter, window) =>
+      val opts = Options(
+        secHdrLength = 4, frameSync = true, apidFilter = filter, resyncWindow = window)
       val expected = pkts.filter(p => filter.forall(_.contains(p.apid))).map { p =>
         val secFlag = if (p.secHdr.nonEmpty) 1 else 0
         (0, p.typeFlag, secFlag, p.apid, p.seqFlags, p.seq, p.secHdr.length + p.user.length - 1,
@@ -412,7 +421,8 @@ object PropertySpec extends Properties("telemetry-kernels") {
       }
       Prop.all(splitSizes.map { s =>
         val rows = got.getOrElse(s, Nil)
-        (rows == expected) :| s"split_size=$s of ${bytes.length}: ${rows.size} rows vs ${expected.size}"
+        (rows == expected) :|
+          s"split_size=$s of ${bytes.length}, resync_window=$window: ${rows.size} rows vs ${expected.size}"
       }: _*)
     }
   }
