@@ -109,17 +109,11 @@ object Clustering {
   def writeIvfIndex(
       corpus: DataFrame, centroids: Seq[(Int, Array[Double])], dir: String,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
-    Sinks.writer(ivfRows(corpus, centroids, idCol, vecCol))
+    Sinks.writer(corpus.select(
+        col(idCol).as("neighbor_id"),
+        nearestCentroid(col(vecCol), centroids).as("cell"),
+        Similarity.normalized(col(vecCol)).as("c_vec")))
       .partitionBy("cell").mode("overwrite").parquet(dir)
-
-  /** An IVF index's rows: id, nearest coarse cell, normalized vector. */
-  private def ivfRows(
-      df: DataFrame, centroids: Seq[(Int, Array[Double])],
-      idCol: String, vecCol: String): DataFrame =
-    df.select(
-      col(idCol).as("neighbor_id"),
-      nearestCentroid(col(vecCol), centroids).as("cell"),
-      Similarity.normalized(col(vecCol)).as("c_vec"))
 
   /** Append a batch to a PERSISTED IVF index without rebuilding it:
     * the batch is assigned against the index's FROZEN coarse
@@ -141,7 +135,10 @@ object Clustering {
   def appendToIvfIndex(
       batch: DataFrame, centroids: Seq[(Int, Array[Double])], dir: String,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
-    Sinks.writer(ivfRows(batch, centroids, idCol, vecCol))
+    Sinks.writer(batch.select(
+        col(idCol).as("neighbor_id"),
+        nearestCentroid(col(vecCol), centroids).as("cell"),
+        Similarity.normalized(col(vecCol)).as("c_vec")))
       .partitionBy("cell").mode("append").parquet(dir)
 
   /** Compact a persisted IVF index in place, optionally applying row

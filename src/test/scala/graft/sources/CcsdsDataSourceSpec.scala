@@ -135,19 +135,19 @@ class CcsdsDataSourceSpec extends SparkSpec {
   }
 
   test("split_size <= 0 is rejected at planning, naming the option") {
-    // before: -1 planned no partition (0 rows, no error) and 0 planned
+    // unchecked, -1 plans no partition (0 rows, no error) and 0 plans
     // Int.MaxValue partitions
     for (v <- Seq("-1", "0"))
       assert(rejected("split_size", v).contains(s"split_size must be > 0, got $v"))
   }
 
   test("a negative resync_window is rejected at planning, naming the option") {
-    // before: every mid-file split rejected its first real packet
+    // unchecked, every mid-file split rejects its first real packet
     assert(rejected("resync_window", "-1").contains("resync_window must be >= 0, got -1"))
   }
 
   test("a negative sec_hdr_length is rejected at planning, naming the option") {
-    // before: a bare copyOfRange error inside the tasks
+    // unchecked, the tasks fail with a bare copyOfRange error
     assert(rejected("sec_hdr_length", "-4").contains("sec_hdr_length must be >= 0, got -4"))
   }
 
