@@ -10,11 +10,10 @@ and compares values exactly. Usage:
     python3 scripts/check_correctness.py /root/testdata/sf0.01 /tmp/verify_out
 
 An optional third argument writes the per-query outcome map as JSON
-(the CORRECTNESS_LOCAL_r{N}.json artifact preflight commits each round,
-so the correctness signal survives a driver hiccup like r15's empty
-CORRECTNESS_r15.json):
+(scripts/preflight.sh passes CORRECTNESS_LOCAL.json, the artifact it
+commits):
 
-    python3 scripts/check_correctness.py SF_DIR OUT_DIR CORRECTNESS_LOCAL_r16.json
+    python3 scripts/check_correctness.py SF_DIR OUT_DIR CORRECTNESS_LOCAL.json
 """
 import glob
 import hashlib

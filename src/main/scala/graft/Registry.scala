@@ -48,17 +48,17 @@ object Registry {
   }
 
   val extractors: Map[String, Extractor] = Map(
-    // V2 `ccsds` source: splittable on sync markers, APID pushdown
+    // V2 `ccsds` source: splittable on sync markers, APID pushdown. Every
+    // other scalar key is a source option, which the source parses and
+    // checks (CcsdsSource.Options.parse); a JSON null counts as absent.
     "binary" -> { (spark, c) =>
-      var reader = spark.read.format("ccsds")
-        .option("path", str(c, "path").getOrElse(sys.error("binary extractor needs 'path'")))
-        .option("sec_hdr_length", int(c, "sec_hdr_length").getOrElse(0).toString)
-        .option("frame_sync", bool(c, "frame_sync").getOrElse(false).toString)
-      str(c, "source_id").foreach(v => reader = reader.option("source_id", v))
-      (c \ "ground_receipt_time").extractOpt[Double]
-        .foreach(v => reader = reader.option("ground_receipt_time", v.toString))
-      int(c, "split_size").foreach(v => reader = reader.option("split_size", v.toString))
-      val df = reader.load()
+      val options = (c match { case JObject(fs) => fs; case _ => Nil }).flatMap {
+        case ("apid_filter", _) | (_, JNull | JNothing) => None
+        case (k, v @ (_: JString | _: JBool | _: JNumber)) => Some(k -> v.values.toString)
+        case (k, v) =>
+          sys.error(s"binary extractor: '$k' must be a scalar, got ${JsonMethods.compact(v)}")
+      }
+      val df = spark.read.format("ccsds").options(options.toMap).load()
       // json4s yields Some(Nil) for a missing Seq key; empty means "no
       // filter" (the reference treats a falsy list the same way). The
       // predicate pushes into the byte walk via SupportsPushDownFilters.
@@ -88,8 +88,7 @@ object Registry {
           apidColumn = str(c, "apid_column").getOrElse("apid"),
           seqCountColumn = str(c, "seq_count_column").getOrElse("seq_count"),
           parameterColumns = (c \ "parameter_columns").extractOpt[Seq[String]].filter(_.nonEmpty),
-          delimiter = str(c, "delimiter").getOrElse(","),
-          sourceId = str(c, "source_id")))
+          delimiter = str(c, "delimiter").getOrElse(",")))
     },
     // newline-delimited JSON documents (pinned schema). Corrupt lines
     // are dropped, but their count is observed on the same action that

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.telemetry.{BinaryExpressions, ParameterDef, ParameterType}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Decommutation: packet rows × MIB parameter definitions → long-format
@@ -23,14 +23,9 @@ import org.apache.spark.sql.functions._
   */
 object Decom {
 
-  def defsDf(spark: SparkSession, defs: Seq[ParameterDef]): DataFrame = {
-    import spark.implicits._
-    defs.toDF()
-  }
-
   def apply(packets: DataFrame, defs: Seq[ParameterDef],
             skipUnknownApids: Boolean = true): DataFrame = {
-    val spark = packets.sparkSession
+    import packets.sparkSession.implicits._
     // Strict mode rejects packets whose APID has no definitions
     // (decom.py:74-77). The check is IN-PLAN (raise_error inside the
     // apid projection, which the join consumes so it cannot be pruned):
@@ -46,7 +41,7 @@ object Decom {
             .otherwise(raise_error(format_string(
               "No parameter definitions for APID 0x%04X", col("apid")))))
       }
-    val mib = broadcast(defsDf(spark, defs)
+    val mib = broadcast(defs.toDF()
       .withColumnRenamed("name", "param_name")
       .withColumnRenamed("unit", "param_unit"))
 

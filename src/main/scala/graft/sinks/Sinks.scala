@@ -1,12 +1,12 @@
 package graft.sinks
 
-import graft.sources.v2.SerializableHadoopConf
 import graft.telemetry.CcsdsColumns
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
 
 /** File sinks (reference loaders, SURVEY.md §2.9).
   *
@@ -102,7 +102,7 @@ object Sinks {
         col("seq_count"), col("data_length")),
       coalesce(col("secondary_header"), lit(Array.emptyByteArray)),
       coalesce(col("user_data"), lit(Array.emptyByteArray))).as("pkt"))
-    val conf = new SerializableHadoopConf(hadoopConf)
+    val conf = new SerializableConfiguration(hadoopConf)
     bytes.foreachPartition { (it: Iterator[Row]) =>
       if (it.hasNext) {
         val path = new Path(dir, f"part-${TaskContext.getPartitionId()}%05d.bin")

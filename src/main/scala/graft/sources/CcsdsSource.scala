@@ -31,9 +31,12 @@ object CcsdsSource {
   private val MarkerWord = 0x1acffc1d
   val HeaderSize = 6
 
-  /** `resyncWindow`: the longest garbage run allowed between a framed
-    * packet and the next marker when a mid-stream split validates its
-    * first candidate (see [[Walker]]).
+  /** The reader's inputs; [[Options.parse]] reads them from the `ccsds`
+    * source's option map. `resyncWindow`: the longest garbage run allowed
+    * between a framed packet and the next marker when a mid-stream split
+    * validates its first candidate (see [[Walker]]). `splitSize`: target
+    * split bytes of a framed file. `apidFilter` is no option: the source
+    * sets it from a pushed-down `apid` predicate.
     */
   case class Options(
       secHdrLength: Int = 0,
@@ -41,9 +44,46 @@ object CcsdsSource {
       apidFilter: Option[Seq[Int]] = None,
       sourceId: Option[String] = None,
       groundReceiptTime: Option[Double] = None,
-      resyncWindow: Int = 0) {
+      resyncWindow: Int = 0,
+      splitSize: Long = 128L << 20) {
     require(secHdrLength >= 0, s"ccsds source: sec_hdr_length must be >= 0, got $secHdrLength")
     require(resyncWindow >= 0, s"ccsds source: resync_window must be >= 0, got $resyncWindow")
+    // the walker scans resyncWindow + 4 bytes; past Int.MaxValue that sum
+    // wraps negative and every mid-stream split would drop its packets
+    require(resyncWindow <= Int.MaxValue - 4,
+      s"ccsds source: resync_window must be <= ${Int.MaxValue - 4}, got $resyncWindow")
+    require(splitSize > 0, s"ccsds source: split_size must be > 0, got $splitSize")
+  }
+
+  object Options {
+
+    /** The `ccsds` source's option keys besides `path`. */
+    private val Keys: Seq[String] = Seq("sec_hdr_length", "frame_sync", "source_id",
+      "ground_receipt_time", "resync_window", "split_size")
+
+    /** The options of a `ccsds` read (keys case-insensitive, as Spark's
+      * are). Any key but these six and `path` is rejected: a typo'd
+      * option would otherwise fall back to its default without a word.
+      * Every parse or range error is an `IllegalArgumentException` that
+      * names its key.
+      */
+    def parse(options: Map[String, String]): Options = {
+      val o = options.map { case (k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v }
+      val unknown = o.keySet -- Keys - "path"
+      require(unknown.isEmpty, s"ccsds source: unknown option(s) " +
+        s"${unknown.toSeq.sorted.mkString(", ")}; known: ${(Keys :+ "path").mkString(", ")}")
+      def get[T](key: String, kind: String)(read: String => T): Option[T] =
+        o.get(key).map(v => scala.util.Try(read(v)).getOrElse(
+          throw new IllegalArgumentException(s"ccsds source: $key must be $kind, got '$v'")))
+      val d = Options()
+      Options(
+        secHdrLength = get("sec_hdr_length", "an integer")(_.toInt).getOrElse(d.secHdrLength),
+        frameSync = get("frame_sync", "true or false")(_.toBoolean).getOrElse(d.frameSync),
+        sourceId = o.get("source_id"),
+        groundReceiptTime = get("ground_receipt_time", "a number")(_.toDouble),
+        resyncWindow = get("resync_window", "an integer")(_.toInt).getOrElse(d.resyncWindow),
+        splitSize = get("split_size", "an integer")(_.toLong).getOrElse(d.splitSize))
+    }
   }
 
   /** Walks the packets whose sync marker (or, unframed, whose first byte)

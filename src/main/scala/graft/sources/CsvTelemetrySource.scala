@@ -20,8 +20,7 @@ object CsvTelemetrySource {
       apidColumn: String = "apid",
       seqCountColumn: String = "seq_count",
       parameterColumns: Option[Seq[String]] = None,
-      delimiter: String = ",",
-      sourceId: Option[String] = None)
+      delimiter: String = ",")
 
   def readSamples(spark: SparkSession, path: String, opts: Options = Options()): DataFrame = {
     val raw = spark.read

@@ -4,7 +4,9 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import graft.sources.CcsdsSource
+import graft.telemetry.PacketRow
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -13,6 +15,7 @@ import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, In}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** Splittable CCSDS packet-stream source (DataSource V2, SURVEY.md §2.1 /
   * §7.2 scale path).
@@ -33,6 +36,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *     .option("sec_hdr_length", "4")
   *     .load()
   *
+  * `CcsdsSource.Options.parse` reads and checks the options and rejects
+  * any key it does not know.
+  *
   * APID predicates (`apid = x`, `apid IN (...)`) push into the scan
   * (SupportsPushDownFilters): filtered packets are dropped during the
   * byte walk, before row materialization — the reference's scan-level
@@ -44,39 +50,30 @@ class CcsdsDataSource extends TableProvider with DataSourceRegister {
     CcsdsDataSource.schema
   override def getTable(
       schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    new CcsdsTable(new CaseInsensitiveStringMap(properties))
-}
-
-object CcsdsDataSource {
-  val schema: StructType = StructType(Seq(
-    StructField("version", IntegerType, nullable = false),
-    StructField("type_flag", IntegerType, nullable = false),
-    StructField("sec_hdr_flag", IntegerType, nullable = false),
-    StructField("apid", IntegerType, nullable = false),
-    StructField("seq_flags", IntegerType, nullable = false),
-    StructField("seq_count", IntegerType, nullable = false),
-    StructField("data_length", IntegerType, nullable = false),
-    StructField("secondary_header", BinaryType),
-    StructField("user_data", BinaryType),
-    StructField("source_time_tai", DoubleType),
-    StructField("ground_receipt_time", DoubleType),
-    StructField("source_id", StringType)))
-}
-
-class CcsdsTable(options: CaseInsensitiveStringMap) extends Table with SupportsRead {
-  override def name(): String = s"ccsds(${options.get("path")})"
-  override def schema(): StructType = CcsdsDataSource.schema
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ).asJava
-  override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder = {
-    val merged = new util.HashMap[String, String](options)
-    merged.putAll(o)
-    new CcsdsScanBuilder(new CaseInsensitiveStringMap(merged))
+      properties: util.Map[String, String]): Table = {
+    val path = new CaseInsensitiveStringMap(properties).get("path")
+    require(path != null, "ccsds source requires a 'path' option")
+    new CcsdsTable(path, CcsdsSource.Options.parse(properties.asScala.toMap))
   }
 }
 
-class CcsdsScanBuilder(options: CaseInsensitiveStringMap)
+object CcsdsDataSource {
+  val schema: StructType = Encoders.product[PacketRow].schema
+}
+
+/** `opts` are parsed from `load()`'s options, which are also the ones a
+  * `DataFrameReader` scan sees, so the scan does not read them again.
+  */
+class CcsdsTable(path: String, opts: CcsdsSource.Options) extends Table with SupportsRead {
+  override def name(): String = s"ccsds($path)"
+  override def schema(): StructType = CcsdsDataSource.schema
+  override def capabilities(): util.Set[TableCapability] =
+    Set(TableCapability.BATCH_READ).asJava
+  override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
+    new CcsdsScanBuilder(path, opts)
+}
+
+class CcsdsScanBuilder(path: String, opts: CcsdsSource.Options)
     extends ScanBuilder with SupportsPushDownFilters {
   private var pushedApids: Option[Seq[Int]] = None
   private var pushed: Array[Filter] = Array.empty
@@ -100,31 +97,16 @@ class CcsdsScanBuilder(options: CaseInsensitiveStringMap)
   }
   override def pushedFilters(): Array[Filter] = pushed
 
-  override def build(): Scan = new CcsdsScan(options, pushedApids)
+  override def build(): Scan = new CcsdsScan(path, opts.copy(apidFilter = pushedApids))
 }
 
-class CcsdsScan(options: CaseInsensitiveStringMap, apids: Option[Seq[Int]])
-    extends Scan with Batch {
+class CcsdsScan(path: String, opts: CcsdsSource.Options) extends Scan with Batch {
   override def readSchema(): StructType = CcsdsDataSource.schema
   override def description(): String =
-    s"CcsdsScan(pushed apids: ${apids.getOrElse(Seq("*")).mkString(",")})"
+    s"CcsdsScan(pushed apids: ${opts.apidFilter.getOrElse(Seq("*")).mkString(",")})"
   override def toBatch: Batch = this
 
-  private def opts = CcsdsSource.Options(
-    secHdrLength = Option(options.get("sec_hdr_length")).map(_.toInt).getOrElse(0),
-    frameSync = Option(options.get("frame_sync")).exists(_.toBoolean),
-    apidFilter = apids,
-    sourceId = Option(options.get("source_id")),
-    groundReceiptTime = Option(options.get("ground_receipt_time")).map(_.toDouble),
-    resyncWindow = Option(options.get("resync_window")).map(_.toInt).getOrElse(0))
-
   override def planInputPartitions(): Array[InputPartition] = {
-    val path = options.get("path")
-    require(path != null, "ccsds source requires a 'path' option")
-    val splitSize = Option(options.get("split_size")).map(_.toLong)
-      .getOrElse(128L << 20)
-    require(splitSize > 0, s"ccsds source: split_size must be > 0, got $splitSize")
-    val o = opts // checks sec_hdr_length and resync_window
     val conf = org.apache.spark.sql.SparkSession.active
       .sparkContext.hadoopConfiguration
     val p = new Path(path)
@@ -149,11 +131,11 @@ class CcsdsScan(options: CaseInsensitiveStringMap, apids: Option[Seq[Int]])
     }
     files.flatMap { f =>
       val len = f.getLen
-      if (!o.frameSync || len <= splitSize) {
+      if (!opts.frameSync || len <= opts.splitSize) {
         Array(CcsdsInputPartition(f.getPath.toString, 0L, len): InputPartition)
       } else {
         // marker-framed: arbitrary byte ranges; the reader resyncs
-        val n = math.ceil(len.toDouble / splitSize).toInt
+        val n = math.ceil(len.toDouble / opts.splitSize).toInt
         val step = math.ceil(len.toDouble / n).toLong
         (0 until n).map { i =>
           CcsdsInputPartition(f.getPath.toString, i * step,
@@ -164,33 +146,18 @@ class CcsdsScan(options: CaseInsensitiveStringMap, apids: Option[Seq[Int]])
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    val conf = new SerializableHadoopConf(
+    // executors must see the session's fs.* settings: an empty
+    // `new Configuration()` loses s3a/hdfs credentials and impls
+    val conf = new SerializableConfiguration(
       org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration)
     new CcsdsReaderFactory(opts, conf)
-  }
-}
-
-/** java.io-serializable Hadoop Configuration carrier (executors must see
-  * the session's fs.* settings — an empty `new Configuration()` loses
-  * s3a/hdfs credentials and impls).
-  */
-class SerializableHadoopConf(@transient var value: org.apache.hadoop.conf.Configuration)
-    extends Serializable {
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    value.write(out)
-  }
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    value = new org.apache.hadoop.conf.Configuration(false)
-    value.readFields(in)
   }
 }
 
 case class CcsdsInputPartition(file: String, start: Long, end: Long)
     extends InputPartition
 
-class CcsdsReaderFactory(opts: CcsdsSource.Options, conf: SerializableHadoopConf)
+class CcsdsReaderFactory(opts: CcsdsSource.Options, conf: SerializableConfiguration)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new CcsdsPartitionReader(

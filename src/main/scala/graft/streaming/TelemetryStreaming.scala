@@ -1,7 +1,5 @@
 package graft.streaming
 
-import graft.operators.{Calibration, Decom}
-import graft.telemetry.{CalibrationEntry, ParameterDef}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -49,14 +47,6 @@ object TelemetryStreaming {
       .flatMap(bytes => graft.sources.CcsdsSource.parseStream(bytes, opts))
       .toDF()
   }
-
-  /** Streaming decom + calibration: identical operators as batch (both
-    * are stateless column maps, so they compose onto the stream).
-    */
-  def decomStream(
-      packets: DataFrame, defs: Seq[ParameterDef],
-      calibrations: Seq[CalibrationEntry]): DataFrame =
-    Calibration(Decom(packets, defs), calibrations)
 
   /** Watermarked tumbling-window aggregation over sample event time.
     * time_tai (seconds) becomes an event-time timestamp; late samples

@@ -304,6 +304,41 @@ class CliSpec extends SparkSpec {
     assert(back.select(sum(col("seq_count"))).head().getLong(0) == (0 until 25).sum)
   }
 
+  /** A framed dump of `n` packets with 1-8 garbage bytes after each one. */
+  private def garbledDump(n: Int): String = {
+    val bytes = (0 until n).flatMap { i =>
+      sources.CcsdsSource.SyncMarker ++
+        Fixtures.makeRawPacket(apid = 0x100, seqCount = i, userData = Array.fill[Byte](20)(7)) ++
+        Array.fill[Byte](i % 8 + 1)(0xee.toByte)
+    }.toArray
+    val f = java.nio.file.Files.createTempDirectory("garbled").resolve("dump.bin")
+    java.nio.file.Files.write(f, bytes).toString
+  }
+
+  private def binary(config: String) =
+    Registry.getExtractor("binary")(spark, Registry.parseConfig(config))
+
+  test("binary extractor forwards resync_window: every split of a garbled dump keeps its packets") {
+    val path = garbledDump(300)
+    val df = binary(
+      s"""{"path": "$path", "frame_sync": true, "split_size": 512, "resync_window": 8,
+         | "source_id": null}""".stripMargin)
+    assert(df.rdd.getNumPartitions > 10, "expected the dump to split")
+    assert(df.select("seq_count").collect().map(_.getInt(0)).sorted.toSeq == (0 until 300))
+  }
+
+  test("binary extractor rejects an unknown key, naming it") {
+    val e = intercept[IllegalArgumentException](
+      binary(s"""{"path": "${garbledDump(5)}", "frame_sync": true, "resync_windw": 8}"""))
+    assert(e.getMessage.contains("unknown option(s) resync_windw"), e.getMessage)
+  }
+
+  test("binary extractor rejects a non-integer split_size, naming it") {
+    val e = intercept[IllegalArgumentException](
+      binary(s"""{"path": "${garbledDump(5)}", "frame_sync": true, "split_size": 4096.5}"""))
+    assert(e.getMessage.contains("split_size must be an integer, got '4096.5'"), e.getMessage)
+  }
+
   test("near_dedup and simhash_dedup stages honor their tuning configs") {
     val docs = Registry.getExtractor("parquet")(spark, Registry.parseConfig(
       """{"path": "/root/testdata/sf0.001/documents.parquet"}"""))

@@ -3,6 +3,7 @@ package graft.sources
 import graft.SparkSpec
 import graft.telemetry.Fixtures
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, DoubleType, IntegerType, StringType}
 
 /** V2 source: split correctness (marker-framed files), the ownership
   * rule, false-sync rejection, and APID pushdown.
@@ -149,6 +150,30 @@ class CcsdsDataSourceSpec extends SparkSpec {
   test("a negative sec_hdr_length is rejected at planning, naming the option") {
     // unchecked, the tasks fail with a bare copyOfRange error
     assert(rejected("sec_hdr_length", "-4").contains("sec_hdr_length must be >= 0, got -4"))
+  }
+
+  test("a resync_window whose scan length overflows an Int is rejected, naming the option") {
+    // unchecked, every mid-file split rejects each candidate and reads nothing
+    assert(rejected("resync_window", Int.MaxValue.toString)
+      .contains(s"resync_window must be <= ${Int.MaxValue - 4}"))
+  }
+
+  test("malformed option values are rejected, naming the option") {
+    for ((key, value, msg) <- Seq(
+        ("sec_hdr_length", "4.0", "sec_hdr_length must be an integer, got '4.0'"),
+        ("frame_sync", "yes", "frame_sync must be true or false, got 'yes'"),
+        ("ground_receipt_time", "noon", "ground_receipt_time must be a number, got 'noon'")))
+      assert(rejected(key, value).contains(msg), s"$key=$value")
+  }
+
+  test("format(ccsds) schema: 12 packet columns, the 7 header ints non-null") {
+    val schema = spark.read.format("ccsds").option("path", markerFramedFile(1).toString).load().schema
+    val header = Seq("version", "type_flag", "sec_hdr_flag", "apid", "seq_flags", "seq_count",
+      "data_length").map((_, IntegerType, false))
+    assert(schema.map(f => (f.name, f.dataType, f.nullable)) == header ++ Seq(
+      ("secondary_header", BinaryType, true), ("user_data", BinaryType, true),
+      ("source_time_tai", DoubleType, true), ("ground_receipt_time", DoubleType, true),
+      ("source_id", StringType, true)))
   }
 
   test("unframed file reads as a single partition") {

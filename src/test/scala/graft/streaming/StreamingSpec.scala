@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.operators.{Calibration, Decom}
 import graft.sources.CcsdsSource
 import graft.telemetry.Fixtures
 import org.apache.spark.sql.functions._
@@ -14,8 +15,7 @@ class StreamingSpec extends SparkSpec {
     val packets = TelemetryStreaming.packetFileStream(
       spark, dir.toString, CcsdsSource.Options(secHdrLength = 4))
     assert(packets.isStreaming)
-    val samples = TelemetryStreaming.decomStream(
-      packets, Fixtures.hkParamDefs, Fixtures.hkCalibrations)
+    val samples = Calibration(Decom(packets, Fixtures.hkParamDefs), Fixtures.hkCalibrations)
     val q = samples.writeStream.format("memory").queryName("stream_samples")
       .outputMode("append").start()
     try {
@@ -33,8 +33,7 @@ class StreamingSpec extends SparkSpec {
     Fixtures.writeHkFile(dir.resolve("a.bin"), 50)
     val packets = TelemetryStreaming.packetFileStream(
       spark, dir.toString, CcsdsSource.Options(secHdrLength = 4))
-    val samples = TelemetryStreaming.decomStream(
-      packets, Fixtures.hkParamDefs, Fixtures.hkCalibrations)
+    val samples = Calibration(Decom(packets, Fixtures.hkParamDefs), Fixtures.hkCalibrations)
     val stats = TelemetryStreaming.windowedStats(samples, windowSeconds = 10, watermarkSeconds = 5)
     val q = stats.writeStream.format("memory").queryName("stream_stats")
       .outputMode("append").start()
@@ -55,8 +54,7 @@ class StreamingSpec extends SparkSpec {
     Fixtures.writeHkFile(dir.resolve("a.bin"), 30) // times 0..29s, 1s apart
     val packets = TelemetryStreaming.packetFileStream(
       spark, dir.toString, CcsdsSource.Options(secHdrLength = 4))
-    val samples = TelemetryStreaming.decomStream(
-      packets, Fixtures.hkParamDefs, Fixtures.hkCalibrations)
+    val samples = Calibration(Decom(packets, Fixtures.hkParamDefs), Fixtures.hkCalibrations)
       .withColumn("event_time", timestamp_seconds(col("time_tai")))
       .withWatermark("event_time", "5 seconds")
       .groupBy(session_window(col("event_time"), "10 seconds"), col("name"))
