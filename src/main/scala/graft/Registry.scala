@@ -59,15 +59,18 @@ object Registry {
           sys.error(s"binary extractor: '$k' must be a scalar, got ${JsonMethods.compact(v)}")
       }
       val df = spark.read.format("ccsds").options(options.toMap).load()
-      // json4s yields Some(Nil) for a missing Seq key; empty means "no
-      // filter" (the reference treats a falsy list the same way). The
-      // predicate pushes into the byte walk via SupportsPushDownFilters.
-      (c \ "apid_filter").extractOpt[Seq[Int]].filter(_.nonEmpty) match {
-        case Some(apids) =>
-          df.where(org.apache.spark.sql.functions.col("apid")
-            .isin(apids.map(Integer.valueOf): _*))
-        case None => df
+      // an empty list means "no filter" (the reference treats a falsy list
+      // the same way); anything but a list of integers is an error, not a
+      // filter silently dropped. The predicate pushes into the byte walk
+      // via SupportsPushDownFilters.
+      val apids = c \ "apid_filter" match {
+        case JNothing | JNull => Nil
+        case JArray(vs) if vs.forall(_.isInstanceOf[JInt]) => vs.collect { case JInt(a) => a.toInt }
+        case v => sys.error(
+          s"binary extractor: apid_filter must be a list of integers, got ${JsonMethods.compact(v)}")
       }
+      if (apids.isEmpty) df
+      else df.where(org.apache.spark.sql.functions.col("apid").isin(apids.map(Integer.valueOf): _*))
     },
     // generic parquet extractor — document/embedding pipelines start here
     "parquet" -> { (spark, c) =>

@@ -339,6 +339,15 @@ class CliSpec extends SparkSpec {
     assert(e.getMessage.contains("split_size must be an integer, got '4096.5'"), e.getMessage)
   }
 
+  test("binary extractor rejects an apid_filter that is not a list of integers") {
+    // json4s reads 512 as no list and [512.7] as [512]: a filter dropped or changed
+    for (filter <- Seq("512", "[512.7]", """[256, "x"]""")) {
+      val e = intercept[RuntimeException](
+        binary(s"""{"path": "${garbledDump(5)}", "apid_filter": $filter}"""))
+      assert(e.getMessage.contains("apid_filter must be a list of integers"), filter)
+    }
+  }
+
   test("near_dedup and simhash_dedup stages honor their tuning configs") {
     val docs = Registry.getExtractor("parquet")(spark, Registry.parseConfig(
       """{"path": "/root/testdata/sf0.001/documents.parquet"}"""))
