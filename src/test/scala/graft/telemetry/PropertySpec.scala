@@ -266,6 +266,92 @@ object PropertySpec extends Properties("telemetry-kernels") {
         ((viaEval == expected) :| s"eval differs: $entries\n$viaEval\n$expected")
     }
 
+  // ---- differential: Telemetry.wide against the per-slot pivot ----
+
+  /** The wide export as `pivot` + one `max(struct(seq_count, eng_value))`
+    * per slot + `.eng_value`, kept here as the reference for
+    * `Telemetry.wide`.
+    */
+  private def pivotReference(samples: DataFrame, names: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.functions.{max, struct}
+    val p = samples.groupBy(col("time_tai"))
+    val pivoted = if (names.nonEmpty) p.pivot("name", names) else p.pivot("name")
+    val winners = pivoted.agg(max(struct(col("seq_count"), col("eng_value"))))
+    winners
+      .select(col("time_tai") +: winners.columns.toSeq.filter(_ != "time_tai").map(c =>
+        col(s"`$c`").getField("eng_value").as(c)): _*)
+      .orderBy("time_tai")
+  }
+
+  private type WideSample = (java.lang.Double, String, Integer, java.lang.Double)
+
+  /** Few times and seq_counts, so (time, name) pairs repeat with equal and
+    * with different seq_counts; values hit null, NaN, ±0.0 and ties.
+    */
+  private def wideSampleGen(names: Seq[String]): Gen[WideSample] = for {
+    time <- Gen.frequency(1 -> Gen.const(null), 30 -> Gen.choose(0, 9).map(t => java.lang.Double.valueOf(t / 2.0)))
+    name <- Gen.frequency(8 -> Gen.oneOf(names), 1 -> Gen.oneOf("q", "p99"), 1 -> Gen.const(null))
+    seq <- Gen.frequency(1 -> Gen.const(null), 12 -> Gen.choose(0, 3).map(Integer.valueOf))
+    value <- Gen.frequency(
+      2 -> Gen.const(null: java.lang.Double),
+      5 -> Gen.oneOf(Double.NaN, 0.0, -0.0, 0.0, -0.0).map(java.lang.Double.valueOf),
+      3 -> Gen.choose(-2, 2).map(v => java.lang.Double.valueOf(v.toDouble)),
+      3 -> Gen.choose(-1e6, 1e6).map(java.lang.Double.valueOf))
+  } yield (time, name, seq, value)
+
+  private val wideSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "time_tai DOUBLE, name STRING, seq_count INT, eng_value DOUBLE")
+
+  /** The (time, name) cells whose winning seq_count holds both 0.0 and
+    * −0.0 as the greatest value: `max` keeps whichever it met first, so
+    * either sign is a right answer there. A null name is the "null"
+    * column that `pivot` discovers without a name list.
+    */
+  private def signedZeroTies(samples: Seq[WideSample]): Set[(Option[Double], String)] =
+    samples.groupBy(s => (Option(s._1).map(_.doubleValue), String.valueOf(s._2))).collect {
+      case (cell, rows) if {
+        val top = rows.flatMap(r => Option(r._3)).map(_.intValue).maxOption
+        val atTop = rows.filter(r => Option(r._3).map(_.intValue) == top).flatMap(r => Option(r._4))
+        val best = atTop.map(_.doubleValue).filterNot(_.isNaN).maxOption(Ordering.Double.TotalOrdering)
+        !atTop.exists(_.isNaN) && best.contains(0.0) &&
+          atTop.exists(v => java.lang.Double.doubleToRawLongBits(v) == 0L) &&
+          atTop.exists(v => java.lang.Double.doubleToRawLongBits(v) != 0L && v == 0.0)
+      } => cell
+    }.toSet
+
+  property("differential: Telemetry.wide equals the per-slot pivot, bit for bit") = {
+    val gen = for {
+      k <- Gen.choose(1, 40)
+      names <- Gen.pick(k, (0 until 48).map(i => s"p$i"))
+      passNames <- Gen.frequency(4 -> true, 1 -> false)
+      n <- Gen.choose(0, 200)
+      samples <- Gen.listOfN(n, wideSampleGen(names.toSeq))
+      partitions <- Gen.choose(1, 8)
+    } yield (if (passNames) names.toSeq else Nil, samples, partitions)
+    Prop.forAllNoShrink(gen) { case (names, samples, partitions) =>
+      val spark = graft.TestSpark.spark
+      val rows = samples.map { case (t, n, s, v) => Row(t, n, s, v) }
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, partitions), wideSchema)
+      val ties = signedZeroTies(samples)
+      def keys(out: DataFrame): (Seq[String], Seq[Seq[Option[Long]]]) = {
+        val cols = out.columns.toSeq
+        (cols, out.collect().toSeq.map { r =>
+          val time = Option(r.get(0)).map(_.asInstanceOf[Double])
+          cols.indices.map { i =>
+            Option(r.get(i)).map(_.asInstanceOf[Double]).map { v =>
+              val tie = i > 0 && v == 0.0 && ties.contains((time, cols(i)))
+              java.lang.Double.doubleToRawLongBits(if (tie) 0.0 else v)
+            }
+          }
+        })
+      }
+      val expected = keys(pivotReference(df, names))
+      val got = keys(graft.operators.Telemetry.wide(df, names))
+      (got == expected) :|
+        s"names=$names, $partitions partitions, ${samples.size} samples:\n$got\n$expected"
+    }
+  }
+
   // ---- differential: the in-memory walk vs the `ccsds` V2 source ----
 
   private val byteGen: Gen[Byte] = Gen.choose(-128, 127).map(_.toByte)
