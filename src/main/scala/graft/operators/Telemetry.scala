@@ -1,6 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.GraftShims.{column, expression}
+import org.apache.spark.sql.catalyst.expressions.GetStructField
 import org.apache.spark.sql.functions._
 
 /** Filters, exports, set ops, and summary aggregates over packet and
@@ -36,38 +38,45 @@ object Telemetry {
   /** Wide/pivoted export (dataset.py:84-95): one column per parameter,
     * full-outer aligned on time. The reference's dict-overwrite makes
     * duplicate (name, time) pairs collapse last-wins in sample order ==
-    * seq order; `max_by(eng_value, seq_count)` reproduces that
-    * deterministically.
+    * seq order: the highest seq_count wins, and equal seq_counts (the
+    * reference's arbitrary insertion order) break deterministically by
+    * value. One [[PivotLastWins]] aggregate per time carries every
+    * parameter's (seq_count, eng_value) winner, and each output column is
+    * one field of its result: the winners `max(struct(seq_count,
+    * eng_value))` would elect per `pivot` slot, in a hash aggregate.
     *
     * PASS `parameterNames` on any data path: with names, building the
-    * plan launches NO job (spec-asserted in TelemetrySpec). The empty
-    * default falls back to `pivot("name")`, which runs an EAGER
-    * distinct-scan of the whole sample frame at PLAN time to discover
-    * the columns — acceptable interactively, wrong inside a pipeline
-    * whose inputs are 100 TB (the scan runs even if the query is never
-    * executed). The MIB/decom definitions already know the parameter
-    * set; thread it through.
+    * plan launches NO job (spec-asserted in GuardsSpec). The empty
+    * default runs an EAGER distinct scan of the whole sample frame at
+    * PLAN time to discover the columns, as `pivot("name")` does (sorted,
+    * at most `spark.sql.pivotMaxValues` names) — acceptable
+    * interactively, wrong inside a pipeline whose inputs are 100 TB (the
+    * scan runs even if the query is never executed). The MIB/decom
+    * definitions already know the parameter set; thread it through.
     */
   def wide(samples: DataFrame, parameterNames: Seq[String] = Nil): DataFrame = {
-    val p = samples.groupBy(col("time_tai"))
-    val pivoted =
-      if (parameterNames.nonEmpty) p.pivot("name", parameterNames)
-      else p.pivot("name")
-    // last-wins = highest seq_count; equal seq_counts (the reference's
-    // arbitrary insertion order) break deterministically by value.
-    // max(struct).eng_value instead of max_by(value, struct): the
-    // lexicographic struct max elects the same (seq, value) winner and
-    // the value field is extracted after the aggregation, so the agg
-    // buffer and the time-keyed exchange carry ONE struct per pivot
-    // slot instead of value + ordering struct (guide §2.3 narrower
-    // exchange rows).
-    val winners = pivoted
-      .agg(max(struct(col("seq_count"), col("eng_value"))))
+    val names = if (parameterNames.nonEmpty) parameterNames else distinctNames(samples)
+    val repeated = names.diff(names.distinct).distinct
+    require(repeated.isEmpty, s"wide: parameter names repeat: ${repeated.mkString(", ")}")
+    val winners = samples.groupBy(col("time_tai")).agg(column(
+      PivotLastWins(expression(col("name")), expression(col("seq_count")),
+        expression(col("eng_value")), names).toAggregateExpression()).as("winners"))
     winners
-      .select(col("time_tai") +:
-        winners.columns.filter(_ != "time_tai").map(c =>
-          col(s"`$c`").getField("eng_value").as(c)): _*)
+      .select(col("time_tai") +: names.indices.map(i =>
+        column(GetStructField(expression(col("winners")), i)).as(String.valueOf(names(i)))): _*)
       .orderBy("time_tai")
+  }
+
+  /** The distinct names of `samples`, sorted with null first, as
+    * `pivot("name")` discovers them.
+    */
+  private def distinctNames(samples: DataFrame): Seq[String] = {
+    val maxValues = samples.sparkSession.conf.get("spark.sql.pivotMaxValues").toInt
+    val found = samples.select(col("name")).distinct().limit(maxValues + 1)
+      .sort(col("name")).collect().toSeq.map(r => Option(r.get(0)).map(_.toString).orNull)
+    require(found.size <= maxValues,
+      s"wide: more than $maxValues distinct names (spark.sql.pivotMaxValues); pass parameterNames")
+    found
   }
 
   /** Dataset union (dataset.py:112-130 `merge`): concatenation, no dedup. */
