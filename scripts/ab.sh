@@ -2,20 +2,21 @@
 # Paired A/B of two commits on one perfbench workload.
 #
 #   scripts/ab.sh <parent-rev> <change-rev> --perfbench <workload> [--pairs 10]
-#                 [--seed 1] [--seconds 15] [--workdir DIR] [--keep]
+#                 [--seed 1] [--workdir DIR] [--keep]
 #
 # Exports each rev's committed files (git archive) into its own directory
 # under --workdir (default: a new directory under ${TMPDIR:-/tmp}) and
-# builds each once. Pair i runs both sides untraced on seed --seed + i,
-# the parent first in even pairs and the change first in odd ones. For each
-# end-to-end metric of BENCHMARK.json it prints both medians, the parent's
-# quartiles, how many pairs the change won (ties count for neither) and the
-# verdict: "win" when the change is better in at least 9 of 10 pairs and
-# its median beats the parent's by more than the parent's interquartile
-# range, "loss" for the same the other way, else "unresolved". Every run's
-# metrics go to ab.json in the work directory; the exported trees are
-# removed at the end unless --keep is given. Needs the Python standard
-# library and sbt.
+# builds each once. Pair i runs both sides untraced on seed --seed + i for
+# the change's BENCHMARK.json run_seconds, the parent first in even pairs
+# and the change first in odd ones. For each end-to-end metric of
+# BENCHMARK.json it prints both medians, the parent's quartiles, how many
+# pairs the change won (ties count for neither) and the verdict: "win" when
+# the change is better in at least 9 of 10 pairs and its median beats the
+# parent's by more than the parent's interquartile range, "loss" for the
+# same the other way, else "unresolved"; fewer than 10 pairs always read
+# "unresolved". Every run's metrics go to ab.json in the work directory;
+# the exported trees are removed at the end unless --keep is given. Needs
+# the Python standard library and sbt.
 set -euo pipefail
 cd "$(git -C "$(dirname "$0")" rev-parse --show-toplevel)"
 exec python3 - "$@" <<'PY'
@@ -34,7 +35,6 @@ ap.add_argument("change")
 ap.add_argument("--perfbench", required=True, metavar="WORKLOAD")
 ap.add_argument("--pairs", type=int, default=10)
 ap.add_argument("--seed", type=int, default=1)
-ap.add_argument("--seconds", type=float, default=15)
 ap.add_argument("--workdir")
 ap.add_argument("--keep", action="store_true")
 a = ap.parse_args()
@@ -69,13 +69,14 @@ for side, sha in sides.items():
     trees[side] = tree
 
 with open(os.path.join(trees["change"], "BENCHMARK.json")) as f:
-    metrics = json.load(f)["end_to_end"]
+    benchmark = json.load(f)
+metrics, seconds = benchmark["end_to_end"], benchmark["run_seconds"]
 
 
 def bench(side, seed):
     proc = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", a.perfbench,
-         "--seed", str(seed), "--seconds", str(a.seconds), "--trace", "0"],
+         "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
         cwd=trees[side], capture_output=True, text=True)
     with open(os.path.join(work, f"{side}.log"), "a") as f:
         f.write(f"--- seed {seed}\n{proc.stderr}")
@@ -105,7 +106,7 @@ def quartiles(xs):
 
 
 print(f"{a.perfbench}: parent {sides['parent'][:12]}, change {sides['change'][:12]}, "
-      f"{a.pairs} pairs from seed {a.seed}, --seconds {a.seconds:g}")
+      f"{a.pairs} pairs from seed {a.seed}, --seconds {seconds:g}")
 print(f"correct runs: parent {sum(r['correct'] for r in runs['parent'])}/{a.pairs}, "
       f"change {sum(r['correct'] for r in runs['change'])}/{a.pairs}")
 print(f"{'metric':22s} {'parent':>12s} {'[q1 - q3]':>27s} {'change':>12s} "
@@ -119,7 +120,7 @@ for m in metrics:
     lost = sum(sign * (c - p) < 0 for p, c in zip(ps, cs))
     pm, cm = statistics.median(ps), statistics.median(cs)
     q1, q3 = quartiles(ps)
-    beyond = abs(cm - pm) > q3 - q1
+    beyond = a.pairs >= 10 and abs(cm - pm) > q3 - q1
     if 10 * won >= 9 * a.pairs and beyond and sign * (cm - pm) > 0:
         verdict = "win"
     elif 10 * lost >= 9 * a.pairs and beyond and sign * (cm - pm) < 0:
@@ -132,7 +133,7 @@ for m in metrics:
           f"{gap:>8s} {won:>3d}/{a.pairs:<2d}  {verdict}")
 
 with open(os.path.join(work, "ab.json"), "w") as f:
-    json.dump({"workload": a.perfbench, "revs": sides, "seconds": a.seconds,
+    json.dump({"workload": a.perfbench, "revs": sides, "seconds": seconds,
                "seed": a.seed, "runs": runs, "verdicts": verdicts}, f, indent=1)
 if not a.keep:
     for tree in trees.values():
