@@ -88,7 +88,8 @@ object Sinks {
     // this, re-running with FEWER partitions leaves stale higher-
     // numbered part-*.bin files from the previous run in place, and the
     // extractor silently reads them back into the round-trip.
-    val hadoopConf = new Configuration(packets.sparkSession.sparkContext.hadoopConfiguration)
+    val sc = packets.sparkSession.sparkContext
+    val hadoopConf = new Configuration(sc.hadoopConfiguration)
     LocalFsOptions.foreach { case (k, v) => hadoopConf.set(k, v) }
     locally {
       val target = new Path(dir)
@@ -102,11 +103,12 @@ object Sinks {
         col("seq_count"), col("data_length")),
       coalesce(col("secondary_header"), lit(Array.emptyByteArray)),
       coalesce(col("user_data"), lit(Array.emptyByteArray))).as("pkt"))
-    val conf = new SerializableConfiguration(hadoopConf)
+    // one broadcast copy per executor, not the whole conf in every task
+    val conf = sc.broadcast(new SerializableConfiguration(hadoopConf))
     bytes.foreachPartition { (it: Iterator[Row]) =>
       if (it.hasNext) {
         val path = new Path(dir, f"part-${TaskContext.getPartitionId()}%05d.bin")
-        val fs = path.getFileSystem(conf.value)
+        val fs = path.getFileSystem(conf.value.value)
         val out = fs.create(path, true)
         try it.foreach(r => out.write(r.getAs[Array[Byte]](0)))
         finally out.close()

@@ -12,6 +12,16 @@ object TestSpark {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  /** Runs `f` with the session settings `settings`, then restores each
+    * key's earlier value, or unsets it.
+    */
+  def withConf[T](settings: (String, String)*)(f: => T): T = {
+    val old = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f
+    finally old.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
 }
 
 abstract class SparkSpec extends AnyFunSuite {

@@ -1,14 +1,20 @@
 package graft.sources
 
-import graft.SparkSpec
+import graft.{SparkSpec, TestSpark}
 import graft.telemetry.Fixtures
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.FilePartition
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, DoubleType, IntegerType, StringType}
 
 /** V2 source: split correctness (marker-framed files), the ownership
-  * rule, false-sync rejection, and APID pushdown.
+  * rule, false-sync rejection, APID pushdown, and how splits are packed
+  * into partitions.
   */
 class CcsdsDataSourceSpec extends SparkSpec {
+  import CcsdsDataSourceSpec._
 
   private def markerFramedFile(n: Int): java.nio.file.Path = {
     val bytes = (0 until n).flatMap { i =>
@@ -31,7 +37,7 @@ class CcsdsDataSourceSpec extends SparkSpec {
       .option("sec_hdr_length", "4")
       .option("split_size", "1024") // force many splits
       .load()
-    assert(df.rdd.getNumPartitions > 5, "expected the file to split")
+    assert(plannedSplits(df) > 5, "expected the file to split")
     // every fixture packet comes back exactly once, bit for bit
     val got = df.select("apid", "seq_count", "secondary_header", "user_data").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getAs[Array[Byte]](2).toSeq,
@@ -185,4 +191,75 @@ class CcsdsDataSourceSpec extends SparkSpec {
     assert(df.rdd.getNumPartitions == 1)
     assert(df.count() == 50)
   }
+
+  /** The packets of `markerFramedFile(500)`, in stream order. */
+  private def framedFixture: Seq[(Int, Int)] =
+    (0 until 500).map(i => (if (i % 3 == 0) 0x200 else 0x100, i))
+
+  private def readFramed(f: java.nio.file.Path, splitSize: Int): DataFrame =
+    spark.read.format("ccsds")
+      .option("path", f.toString).option("frame_sync", "true")
+      .option("sec_hdr_length", "4").option("split_size", splitSize.toString).load()
+
+  test("24 small unframed files pack into 4 partitions at local[4], each file in exactly one") {
+    val dir = java.nio.file.Files.createTempDirectory("v2pack")
+    for (i <- 0 until 24) Fixtures.writeHkFile(dir.resolve(f"pass$i%02d.bin"), 20)
+    val df = spark.read.format("ccsds")
+      .option("path", dir.toString).option("sec_hdr_length", "4").load()
+    val parts = plannedPartitions(df)
+    assert(parts.size == 4, s"partitions: ${parts.map(_.files.length)}")
+    val files = parts.flatMap(_.files.map(_.toPath.getName))
+    assert(files.sorted == (0 until 24).map(i => f"pass$i%02d.bin"), files)
+    assert(df.count() == 24 * 20)
+  }
+
+  test("spark.sql.files.maxPartitionBytes of 1 byte makes every split its own partition") {
+    val f = markerFramedFile(500)
+    TestSpark.withConf("spark.sql.files.maxPartitionBytes" -> "1") {
+      val df = readFramed(f, 1024)
+      val parts = plannedPartitions(df)
+      assert(parts.size > 5 && parts.forall(_.files.length == 1),
+        s"splits per partition: ${parts.map(_.files.length)}")
+      assert(df.select("apid", "seq_count").collect()
+        .map(r => (r.getInt(0), r.getInt(1))).toSeq == framedFixture)
+    }
+  }
+
+  test("a framed file's packed splits come out in stream order, unsorted") {
+    val df = readFramed(markerFramedFile(500), 1024)
+    val parts = plannedPartitions(df)
+    assert(parts.exists(_.files.length > 1), s"no partition packs two splits: ${parts.map(_.files.length)}")
+    assert(df.select("apid", "seq_count").collect()
+      .map(r => (r.getInt(0), r.getInt(1))).toSeq == framedFixture)
+  }
+
+  test("the scan's reader factory serializes small: the Hadoop conf is a broadcast") {
+    // with the session's Hadoop conf embedded it serialized to ~110 KB,
+    // deserialized again by every task downstream of the scan
+    val df = readFramed(markerFramedFile(50), 1024)
+    val factory = scan(df).readerFactory
+    assert(factory.isInstanceOf[v2.CcsdsReaderFactory], factory)
+    val bytes = new java.io.ByteArrayOutputStream
+    val out = new java.io.ObjectOutputStream(bytes)
+    out.writeObject(factory)
+    out.close()
+    assert(bytes.size < 8192, s"CcsdsReaderFactory serializes to ${bytes.size} bytes")
+  }
+}
+
+object CcsdsDataSourceSpec extends AdaptiveSparkPlanHelper {
+
+  /** The `ccsds` scan in `df`'s executed plan. */
+  def scan(df: DataFrame): BatchScanExec =
+    collectFirst(df.queryExecution.executedPlan) { case s: BatchScanExec => s }
+      .getOrElse(fail(s"no BatchScanExec in\n${df.queryExecution.executedPlan}"))
+
+  /** The partitions that scan packed its splits into. */
+  def plannedPartitions(df: DataFrame): Seq[FilePartition] =
+    scan(df).inputPartitions.map(_.asInstanceOf[FilePartition])
+
+  /** The number of splits that scan planned, over all its partitions. */
+  def plannedSplits(df: DataFrame): Int = plannedPartitions(df).map(_.files.length).sum
+
+  private def fail(msg: String) = throw new AssertionError(msg)
 }

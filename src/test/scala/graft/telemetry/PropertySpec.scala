@@ -484,13 +484,24 @@ object PropertySpec extends Properties("telemetry-kernels") {
       (CcsdsSource.SyncMarker ++ last.bytes).take(keep), pkts.map(_._1))
   }
 
+  /** Session settings that change how Spark packs a scan's splits into
+    * partitions: from one split per partition (a small file at the
+    * default open cost) to every split in one (an open cost of 1 byte
+    * with a minimum of one partition). An absent key keeps its default.
+    */
+  private val packingGen: Gen[Seq[(String, String)]] = for {
+    openCost <- Gen.option(Gen.const("spark.sql.files.openCostInBytes" -> "1"))
+    minParts <- Gen.option(Gen.const("spark.sql.files.minPartitionNum" -> "1"))
+  } yield openCost.toSeq ++ minParts
+
   property("format(ccsds) at every split_size reproduces a framed stream's packets") = {
     val gen = for {
       window <- Gen.frequency(1 -> Gen.const(0), 2 -> Gen.choose(1, 48))
       stream <- framedStreamGen(window)
       filter <- Gen.option(Gen.atLeastOne(apids).map(_.toSeq))
-    } yield (stream, filter, window)
-    Prop.forAllNoShrink(gen) { case ((bytes, pkts), filter, window) =>
+      packing <- packingGen
+    } yield (stream, filter, window, packing)
+    Prop.forAllNoShrink(gen) { case ((bytes, pkts), filter, window, packing) =>
       val opts = Options(
         secHdrLength = 4, frameSync = true, apidFilter = filter, resyncWindow = window)
       val expected = pkts.filter(p => filter.forall(_.contains(p.apid))).map { p =>
@@ -501,14 +512,15 @@ object PropertySpec extends Properties("telemetry-kernels") {
       val splitSizes = ((1024L until bytes.length.toLong by 1024L) :+ bytes.length.toLong).distinct
       val got = withFile(bytes) { path =>
         // one job for all split sizes; union keeps each read's partition order
-        splitSizes.map(s => readCcsds(path, opts, s).withColumn("split_size", lit(s)))
-          .reduce(_ union _).collect().toSeq
-          .groupBy(_.getLong(12)).map { case (s, rows) => s -> rows.map(key) }
+        graft.TestSpark.withConf(packing: _*) {
+          splitSizes.map(s => readCcsds(path, opts, s).withColumn("split_size", lit(s)))
+            .reduce(_ union _).collect().toSeq
+        }.groupBy(_.getLong(12)).map { case (s, rows) => s -> rows.map(key) }
       }
       Prop.all(splitSizes.map { s =>
         val rows = got.getOrElse(s, Nil)
-        (rows == expected) :|
-          s"split_size=$s of ${bytes.length}, resync_window=$window: ${rows.size} rows vs ${expected.size}"
+        (rows == expected) :| (s"split_size=$s of ${bytes.length}, resync_window=$window, " +
+          s"packing ${packing.mkString(",")}: ${rows.size} rows vs ${expected.size}")
       }: _*)
     }
   }
