@@ -34,9 +34,10 @@ object CcsdsSource {
   /** The reader's inputs; [[Options.parse]] reads them from the `ccsds`
     * source's option map. `resyncWindow`: the longest garbage run allowed
     * between a framed packet and the next marker when a mid-stream split
-    * validates its first candidate (see [[Walker]]). `splitSize`: the length
-    * of a framed file's splits (Spark packs splits into partitions). `apidFilter` is no option: the source
-    * sets it from a pushed-down `apid` predicate.
+    * validates its first candidate (see [[Walker]]). `splitSize`: the
+    * length of a framed file's splits (Spark packs splits into
+    * partitions). `apidFilter` is no option: the source sets it from a
+    * pushed-down `apid` predicate.
     */
   case class Options(
       secHdrLength: Int = 0,

@@ -142,8 +142,7 @@ class CcsdsScan(path: String, opts: CcsdsSource.Options) extends Scan with Batch
     files.toSeq.flatMap { f =>
       val len = f.getLen
       def split(start: Long, end: Long) =
-        PartitionedFile(InternalRow.empty, SparkPath.fromPath(f.getPath), start, end - start,
-          fileSize = len)
+        PartitionedFile(InternalRow.empty, SparkPath.fromPath(f.getPath), start, end - start)
       if (!opts.frameSync || len <= opts.splitSize) {
         Seq(split(0L, len))
       } else {
