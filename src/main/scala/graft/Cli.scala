@@ -131,26 +131,34 @@ object Cli {
     if (v.trim.startsWith("{")) v
     else new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(v)), "UTF-8")
 
+  /** Each flag may be given once, except that every `--transformer`
+    * takes its own `--transformer-config`.
+    */
   private[graft] def parseRunArgs(args: List[String]): RunOpts = {
-    def go(rest: List[String], acc: RunOpts): RunOpts = rest match {
-      case "--extractor" :: v :: t => go(t, acc.copy(extractor = Some(v)))
-      case "--extractor-config" :: v :: t =>
-        go(t, acc.copy(extractorConfig = Some(readMaybeFile(v))))
-      case "--transformer" :: v :: t =>
-        go(t, acc.copy(transformers = acc.transformers :+ (v -> "")))
-      case "--transformer-config" :: v :: t =>
-        if (acc.transformers.isEmpty)
-          sys.error("--transformer-config requires a preceding --transformer")
-        val updated = acc.transformers.dropRight(1) :+
-          (acc.transformers.last._1 -> readMaybeFile(v))
-        go(t, acc.copy(transformers = updated))
-      case "--loader" :: v :: t => go(t, acc.copy(loader = Some(v)))
-      case "--loader-config" :: v :: t =>
-        go(t, acc.copy(loaderConfig = Some(readMaybeFile(v))))
-      case "--dry-run" :: t => go(t, acc.copy(dryRun = true))
-      case Nil => acc
-      case bad :: _ => sys.error(s"Unknown run option: $bad")
+    def go(rest: List[String], acc: RunOpts, seen: Set[String]): RunOpts = {
+      def next(t: List[String], updated: RunOpts) = go(t, updated, seen + rest.head)
+      rest match {
+        case flag :: _ if seen(flag) => sys.error(s"$flag is given more than once")
+        case "--extractor" :: v :: t => next(t, acc.copy(extractor = Some(v)))
+        case "--extractor-config" :: v :: t =>
+          next(t, acc.copy(extractorConfig = Some(readMaybeFile(v))))
+        case "--transformer" :: v :: t =>
+          go(t, acc.copy(transformers = acc.transformers :+ (v -> "")),
+            seen - "--transformer-config")
+        case "--transformer-config" :: v :: t =>
+          if (acc.transformers.isEmpty)
+            sys.error("--transformer-config requires a preceding --transformer")
+          val updated = acc.transformers.dropRight(1) :+
+            (acc.transformers.last._1 -> readMaybeFile(v))
+          next(t, acc.copy(transformers = updated))
+        case "--loader" :: v :: t => next(t, acc.copy(loader = Some(v)))
+        case "--loader-config" :: v :: t =>
+          next(t, acc.copy(loaderConfig = Some(readMaybeFile(v))))
+        case "--dry-run" :: t => next(t, acc.copy(dryRun = true))
+        case Nil => acc
+        case bad :: _ => sys.error(s"Unknown run option: $bad")
+      }
     }
-    go(args, RunOpts())
+    go(args, RunOpts(), Set.empty)
   }
 }

@@ -19,7 +19,9 @@ object Logging {
       includeCaller: Boolean = false): Unit = {
     require(fmt == "console" || fmt == "json",
       s"unknown log format '$fmt' (expected console|json)")
-    val lvl = Level.toLevel(level.toUpperCase, Level.INFO)
+    val lvl = Level.getLevel(level.toUpperCase(java.util.Locale.ROOT))
+    require(lvl != null, s"unknown log level '$level' " +
+      s"(expected ${Level.values.sorted.mkString("|")})")
     val b = ConfigurationBuilderFactory.newConfigurationBuilder()
     b.setConfigurationName("graft")
     val layout = fmt match {

@@ -55,6 +55,7 @@ object ParameterType {
   val ENUMERATED = "enumerated"
   val BINARY = "binary"
   val STRING = "string"
+  val values: Seq[String] = Seq(UINT, INT, FLOAT, DOUBLE, BOOLEAN, ENUMERATED, BINARY, STRING)
 }
 
 /** MIB-style parameter definition (decom.py:35-47): where a parameter
@@ -68,7 +69,13 @@ case class ParameterDef(
     param_type: String,
     unit: Option[String] = None,
     little_endian: Boolean = false,
-    description: Option[String] = None)
+    description: Option[String] = None) {
+  require(ParameterType.values.contains(param_type),
+    s"parameter $name: param_type must be one of ${ParameterType.values.mkString(", ")}, " +
+      s"got '$param_type'")
+  require(byte_offset >= 0, s"parameter $name: byte_offset must be >= 0, got $byte_offset")
+  require(bit_length >= 1, s"parameter $name: bit_length must be >= 1, got $bit_length")
+}
 
 /** Calibration spec for one parameter (calibration.py:29-66).
   * method: "polynomial" | "table" | "identity".
@@ -80,6 +87,10 @@ case class CalibrationEntry(
     coefficients: Seq[Double] = Nil,
     table_raw: Seq[Double] = Nil,
     table_eng: Seq[Double] = Nil) {
+  // any other method would pass raw values through under its own name
+  require(Seq("identity", "polynomial", "table").contains(method),
+    s"calibration for $parameter_name: method must be identity, polynomial or table, " +
+      s"got '$method'")
   require(
     table_raw.size == table_eng.size,
     s"table_raw/table_eng size mismatch for $parameter_name")

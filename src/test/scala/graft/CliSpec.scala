@@ -480,4 +480,193 @@ class CliSpec extends SparkSpec {
       .count().where(col("count") > 1).count()
     assert(dupGroups == 0)
   }
+
+  test("run-arg parser rejects a repeated flag, naming it") {
+    val once = List("--extractor", "binary", "--extractor-config", "{}",
+      "--transformer", "decom", "--transformer-config", "{}",
+      "--loader", "parquet", "--loader-config", "{}")
+    for ((flag, value) <- Seq("--extractor" -> "csv", "--extractor-config" -> "{}",
+        "--transformer-config" -> "{}", "--loader" -> "csv", "--loader-config" -> "{}")) {
+      val e = intercept[RuntimeException](Cli.parseRunArgs(once ++ List(flag, value)))
+      assert(e.getMessage.contains(s"$flag is given more than once"), e.getMessage)
+    }
+    // each --transformer takes its own --transformer-config
+    val two = Cli.parseRunArgs(once ++ List("--transformer", "apid_filter",
+      "--transformer-config", """{"include": [256]}"""))
+    assert(two.transformers.map(_._2) == Seq("{}", """{"include": [256]}"""))
+  }
+
+  /** Applies a stage to `config`; the input frame is empty, since a
+    * config error surfaces before the stage touches its input.
+    */
+  private def applyStage(role: String, name: String, config: String): Unit = {
+    val c = Registry.parseConfig(config)
+    role match {
+      case "extractors" => Registry.getExtractor(name)(spark, c)
+      case "transformers" => Registry.getTransformer(name)(c)(spark.emptyDataFrame)
+      case "loaders" => Registry.getLoader(name)(spark.emptyDataFrame, c)
+    }
+  }
+
+  /** Every stage: a minimal valid config and a misspelling of one of its keys. */
+  private val misspelled: Map[(String, String), (String, String)] = {
+    val path = """{"path": "/nonexistent"}"""
+    val out = """{"output_dir": "/nonexistent"}"""
+    Map(
+      ("extractors", "binary") -> (path, "sec_hdr_lenght"),
+      ("extractors", "csv") -> (path, "time_colum"),
+      ("extractors", "jsonl") -> (path, "paht"),
+      ("extractors", "orc") -> (path, "paht"),
+      ("extractors", "parquet") -> (path, "paht"),
+      ("transformers", "apid_filter") -> ("{}", "inclde"),
+      ("transformers", "c4_clean") -> ("{}", "min_kept_line"),
+      ("transformers", "calibration") -> ("{}", "calibration"),
+      ("transformers", "ccnet_bucket_filter") -> ("{}", "keep_bucket"),
+      ("transformers", "chunk_documents") -> ("{}", "chunk_token"),
+      ("transformers", "classifier_filter") -> ("{}", "dims"),
+      ("transformers", "code_filter") -> ("{}", "mod"),
+      ("transformers", "containment_dedup") -> ("{}", "treshold"),
+      ("transformers", "decom") -> ("{}", "parameter"),
+      ("transformers", "decontaminate") -> ("""{"eval_ids": [1]}""", "min_share"),
+      ("transformers", "domain_cap") -> ("{}", "max_per_domian"),
+      ("transformers", "dsir_sample") -> ("{}", "target_quality_mn"),
+      ("transformers", "dup_span_strip") -> ("{}", "window_length"),
+      ("transformers", "entropy_filter") -> ("{}", "min_entrpy"),
+      ("transformers", "eval_overlap") -> ("{}", "eval_modulo"),
+      ("transformers", "exact_dedup") -> ("{}", "id_colum"),
+      ("transformers", "gopher_filter") -> ("{}", "min_word"),
+      ("transformers", "hash_split") -> ("{}", "split"),
+      ("transformers", "lang_filter") -> ("""{"languages": ["en"]}""", "language"),
+      ("transformers", "length_batching") -> ("{}", "batchsize"),
+      ("transformers", "line_dedup") -> ("{}", "min_df"),
+      ("transformers", "near_dedup") -> ("{}", "threshhold"),
+      ("transformers", "novelty_filter") -> ("{}", "min_novel"),
+      ("transformers", "pack_sequences") -> ("{}", "token_budgets"),
+      ("transformers", "perplexity_filter") -> ("{}", "min_logprob"),
+      ("transformers", "pii_redact") -> ("{}", "text_col"),
+      ("transformers", "quality_filter") -> ("{}", "minscore"),
+      ("transformers", "quality_quantile_filter") -> ("{}", "percentil"),
+      ("transformers", "repetition_filter") -> ("{}", "max_top_word_fraction"),
+      ("transformers", "semantic_decontaminate") ->
+        ("""{"eval_flag_column": "is_eval"}""", "threshhold"),
+      ("transformers", "semantic_dedup") -> ("{}", "ncells"),
+      ("transformers", "simhash_dedup") -> ("{}", "max_haming"),
+      ("transformers", "soft_dedup_weights") -> ("{}", "id_col"),
+      ("transformers", "source_mix") -> ("{}", "weight"),
+      ("transformers", "source_upsample") -> ("{}", "factor"),
+      ("transformers", "stratified_sample") -> ("{}", "rate_permille"),
+      ("transformers", "temperature_mix") -> ("{}", "temp"),
+      ("transformers", "token_budget") -> ("""{"budget_tokens": 100}""", "budget_token"),
+      ("transformers", "unimax_resample") -> ("{}", "budget_frac"),
+      ("transformers", "url_dedup") -> ("{}", "url_col"),
+      ("transformers", "weighted_sample") -> ("{}", "max_per_strata"),
+      ("loaders", "ccsds") -> (out, "outputdir"),
+      ("loaders", "csv") -> (out, "overwrit"),
+      ("loaders", "jsonl") -> (out, "outputdir"),
+      ("loaders", "orc") -> (out, "overwrte"),
+      ("loaders", "parquet") -> (out, "partition_by_apids"))
+  }
+
+  test("every registry stage fails on a misspelled key, naming the stage and the key") {
+    val stages = Registry.allStages.toSeq.flatMap { case (role, names) => names.map(role -> _) }
+    assert(stages.size == 51 && stages.toSet == misspelled.keySet)
+    for (((role, name), (minimal, typo)) <- misspelled) {
+      val config = minimal.dropRight(1) + (if (minimal == "{}") "" else ", ") + s""""$typo": 1}"""
+      val e = intercept[IllegalArgumentException](applyStage(role, name, config))
+      val stage = s"$name ${role.dropRight(1)}"
+      assert(e.getMessage.startsWith(stage) && e.getMessage.contains(typo), s"$config: ${e.getMessage}")
+    }
+  }
+
+  test("every reader kind rejects a value of the wrong type, naming the stage, key and value") {
+    val cases = Seq(
+      ("transformers", "exact_dedup", """{"id_column": 5}""", "id_column must be a string, got 5"),
+      ("transformers", "gopher_filter", """{"min_words": 50.5}""",
+        "min_words must be an integer, got 50.5"),
+      ("transformers", "gopher_filter", """{"min_words": "50"}""",
+        "min_words must be an integer, got \"50\""),
+      ("transformers", "gopher_filter", """{"min_words": 4294967296}""",
+        "min_words must be an integer, got 4294967296"),
+      ("transformers", "token_budget", """{"budget_tokens": 1.5}""",
+        "budget_tokens must be an integer, got 1.5"),
+      ("transformers", "quality_filter", """{"min_score": "0.5"}""",
+        "min_score must be a number, got \"0.5\""),
+      ("transformers", "perplexity_filter", """{"keep_empty": 1}""",
+        "keep_empty must be a boolean, got 1"),
+      ("transformers", "lang_filter", """{"languages": "en"}""",
+        "languages must be a non-empty list of strings, got \"en\""),
+      ("transformers", "lang_filter", """{"languages": []}""",
+        "languages must be a non-empty list of strings, got []"),
+      ("transformers", "decontaminate", """{"eval_ids": [1.5]}""",
+        "eval_ids must be a list of integers, got [1.5]"),
+      ("transformers", "source_mix", """{"weights": {"a": "x"}}""",
+        "weights must be an object of numbers, got {\"a\":\"x\"}"),
+      ("transformers", "stratified_sample", """{"rates_permille": {"en": 2.5}}""",
+        "rates_permille must be an object of integers"),
+      ("transformers", "hash_split", """{"splits": [{"name": "a", "fraction": "1"}]}""",
+        "splits[0]: fraction must be a number, got \"1\""),
+      ("transformers", "calibration", """{"calibrations": [{"parameter_name": "x", "method": "cubic"}]}""",
+        "calibrations[0]: calibration for x: method must be identity, polynomial or table"),
+      ("transformers", "near_dedup", """{"keep": "max_id"}""",
+        "keep must be one of min_id, best_quality, got \"max_id\""),
+      ("transformers", "perplexity_filter", """{"order": 3}""", "order must be one of 1, 2, got 3"),
+      ("transformers", "code_filter", "[1]", "config must be an object, got [1]"),
+      ("extractors", "parquet", "{}", "path must be a string, got nothing"),
+      ("extractors", "binary", """{"path": "/nonexistent", "frame_sync": [true]}""",
+        "frame_sync must be a scalar, got [true]"),
+      ("loaders", "parquet", """{"output_dir": "/nonexistent", "overwrite": "yes"}""",
+        "overwrite must be a boolean, got \"yes\""))
+    for ((role, name, config, expected) <- cases) {
+      val e = intercept[IllegalArgumentException](applyStage(role, name, config))
+      assert(e.getMessage.startsWith(s"$name ${role.dropRight(1)}: ") &&
+        e.getMessage.contains(expected), s"$config: ${e.getMessage}")
+    }
+  }
+
+  test("a JSON null counts as an absent key") {
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    def kept(config: String) = Registry.getTransformer("exact_dedup")(
+      Registry.parseConfig(config))(docs).count()
+    assert(kept("""{"id_column": null, "text_column": null}""") == kept("{}"))
+  }
+
+  test("each config probe and single-branch key fails the stage, naming it and the key") {
+    // each of these read as absent or was ignored by the lenient json4s reads
+    val hk = java.nio.file.Files.createTempDirectory("cli_probe")
+    Fixtures.writeHkFile(hk.resolve("hk.bin"), 10)
+    val packets = binary(s"""{"path": "$hk", "sec_hdr_length": 4}""")
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .withColumn("is_eval", org.apache.spark.sql.functions.col("doc_id") % 10 === 7)
+    def param(fields: String) =
+      s"""{"parameters": [{"name": "p", "apid": 256, "bit_length": 16, $fields}]}"""
+    val probes = Seq(
+      ("apid_filter", packets, """{"include": 512}""", "include"),
+      ("apid_filter", packets, """{"include": "512"}""", "include"),
+      ("apid_filter", packets, """{"exclude": 512}""", "exclude"),
+      ("apid_filter", packets, """{"inclde": [512]}""", "inclde"),
+      ("apid_filter", packets, """{"include": [512.7]}""", "include"),
+      ("decom", packets, """{"skip_unknown_apids": "false"}""", "skip_unknown_apids"),
+      ("decom", packets, """{"skip_unknown_apid": false}""", "skip_unknown_apid"),
+      ("decom", packets, param(""""byte_offset": 0, "param_type": "unit""""), "param_type"),
+      ("decom", packets, param(""""byte_offset": -3, "param_type": "uint""""), "byte_offset"),
+      ("decom", packets,
+        param(""""byte_offset": 0, "param_type": "uint", "litle_endian": true"""), "litle_endian"),
+      ("exact_dedup", docs, """{"id_colum": "doc_id"}""", "id_colum"),
+      // keys that only the branch a config does not take would read
+      ("decontaminate", docs, """{"eval_ids": [7], "eval_flag_column": "is_eval"}""",
+        "eval_flag_column"),
+      ("eval_overlap", docs, """{"eval_flag_column": "is_eval", "eval_modulus": 5}""",
+        "eval_modulus"),
+      ("near_dedup", docs, """{"method": "ngram_jaccard", "num_hashes": 8}""", "num_hashes"))
+    val missed = probes.flatMap { case (name, input, config, key) =>
+      scala.util.Try(Registry.getTransformer(name)(Registry.parseConfig(config))(input).count())
+        .fold({
+          case e: IllegalArgumentException
+              if e.getMessage.startsWith(s"$name transformer: ") && e.getMessage.contains(key) =>
+            None
+          case e => Some(s"$name $config: ${e.getMessage}")
+        }, _ => Some(s"$name $config: no error"))
+    }
+    assert(missed.isEmpty, missed.mkString("\n"))
+  }
 }

@@ -46,4 +46,11 @@ class LoggingSpec extends AnyFunSuite {
   test("unknown format is rejected") {
     intercept[IllegalArgumentException](Logging.configure(fmt = "xml"))
   }
+
+  test("unknown level is rejected, naming it, and leaves the configuration alone") {
+    val before = ctx.getConfiguration
+    val e = intercept[IllegalArgumentException](Logging.configure(level = "VERBOSE"))
+    assert(e.getMessage.contains("'VERBOSE'") && e.getMessage.contains("DEBUG"), e.getMessage)
+    assert(ctx.getConfiguration eq before)
+  }
 }
