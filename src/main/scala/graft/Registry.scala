@@ -834,7 +834,7 @@ object Registry {
         trainer, k, iterations = 1, idCol = id, vecCol = vec, sampleMod = smod)
       // fraction mode resolves to a concrete probe depth HERE, against
       // the k this corpus actually trained
-      val nprobe = probe.fold(f => operators.Clustering.fractionNprobe(f, cents.size), n => n)
+      val nprobe = probe.fold(f => operators.Clustering.fractionNprobe(f, cents.size), identity)
       val trainCells = operators.Clustering.assign(train, cents, vec).select(
         col(id).as("_t_id"), col("centroid_id").as("_cell"),
         operators.Similarity.normalized(col(vec)).as("_t_en"))
